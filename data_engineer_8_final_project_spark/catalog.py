@@ -1,17 +1,30 @@
-"""Fixture catalog: load the driver parquet tables, register temp views.
+"""Fixture catalog: load the parquet fixture tables once per session.
 
 This is the engine's equivalent of the reference's warehouse database
 (reference sql/warehouse-ddl.sql:1-2 — ``CREATE DATABASE warehouse``):
 a named-table surface that both the DataFrame API and ``spark.sql``
 queries resolve against.
 
-Scans stay lazy — registering 10 views costs nothing; Catalyst prunes
-columns and pushes predicates into each parquet scan per-query.
+Loading is not free. Reading the 10 tables and registering their views
+costs about 80 ms of py4j calls on a warm single-client session, and
+about 0.19 s per query when two concurrent clients each reloaded per
+query (4 cores, sf0.01). So queries go through :func:`tables`, which
+memoizes the loaded frames per session. The memo key is the session
+plus the resolved ``sf_dir``; the entry is replaced when any fixture
+file's ``st_mtime_ns`` changes. A hit registers nothing, which is why
+query functions bind their inputs as DataFrames and never read the
+session views by name.
+
+Scans stay lazy: Catalyst prunes columns and pushes predicates into
+each parquet scan per query.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Mapping
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,6 +39,13 @@ _format_checked: set[tuple[str, int]] = set()
 
 #: (resolved path, mtime_ns) -> footer row count, memoized per process.
 _row_counts: dict[tuple[str, int], int] = {}
+
+#: session attribute holding that session's memo:
+#: resolved sf_dir -> (mtime stamp, read-only name -> DataFrame)
+_MEMO_ATTR = "_graft_fixture_tables"
+
+#: serializes cold misses, so concurrent clients build one entry
+_miss_lock = threading.Lock()
 
 
 def _parquet_parts(path: str) -> list[str]:
@@ -108,15 +128,63 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(path)
 
 
-def load(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load every fixture table and register each as a temp view.
+def _stamp(sf_dir: str) -> tuple[int, ...]:
+    """``st_mtime_ns`` of every fixture path, and of every part file
+    of a directory-shaped table."""
+    stamp = []
+    for name in TABLE_NAMES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        stamp.append(os.stat(path).st_mtime_ns)
+        if os.path.isdir(path):
+            stamp.extend(os.stat(p).st_mtime_ns for p in _parquet_parts(path))
+    return tuple(stamp)
 
-    Returns name → DataFrame. Idempotent — re-registering replaces the
-    previous view, so tests can call this freely per scale factor.
+
+def _memo(spark: SparkSession) -> dict[str, tuple[tuple[int, ...], Mapping[str, DataFrame]]]:
+    """The session's own memo. It lives on the session object, so it
+    goes when the session does: a ``WeakKeyDictionary`` keyed on the
+    session would never drop an entry, since every cached DataFrame
+    holds its session strongly."""
+    return spark.__dict__.setdefault(_MEMO_ATTR, {})
+
+
+def load(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
+    """Read every fixture table, register each as a temp view, and
+    store the frames as this session's :func:`tables` entry for
+    ``sf_dir``.
+
+    Returns a fresh name → DataFrame dict. Always reads: call
+    :func:`tables` instead unless a reload is the point. The views
+    serve interactive ``spark.sql``; re-registering replaces the
+    previous ones, and no query reads them.
     """
-    tables: dict[str, DataFrame] = {}
+    root = os.path.realpath(sf_dir)
+    stamp = _stamp(root)
+    frames: dict[str, DataFrame] = {}
     for name in TABLE_NAMES:
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
-        tables[name] = df
-    return tables
+        frames[name] = df
+    _memo(spark)[root] = (stamp, MappingProxyType(dict(frames)))
+    return frames
+
+
+def tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Mapping[str, DataFrame]:
+    """The fixture tables of ``sf_dir`` for ``spark``, loaded once.
+
+    Returns this session's cached read-only name → DataFrame mapping,
+    the same object on every hit. A miss (first call for the resolved
+    ``sf_dir``, or a fixture file whose ``st_mtime_ns`` moved) calls
+    :func:`load` under a lock, so concurrent clients on a cold key
+    build one entry; ``load`` re-runs the events footer check.
+    """
+    root = os.path.realpath(sf_dir)
+    stamp = _stamp(root)
+    entry = _memo(spark).get(root)
+    if entry is None or entry[0] != stamp:
+        with _miss_lock:
+            entry = _memo(spark).get(root)
+            if entry is None or entry[0] != stamp:
+                load(spark, sf_dir)
+                entry = _memo(spark)[root]
+    return entry[1]

@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import register, tables_for
+from .. import catalog
+from ..registry import register
 from ..stage import stage_frame
 
 # --------------------------------------------------------------------------
@@ -42,7 +43,7 @@ from ..stage import stage_frame
     tags=("bench",),
 )
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     li = t["lineitem"].filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
@@ -74,7 +75,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.4 A1 (group-count) + declared count_distinct widening",
 )
 def q_group_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["orders"]
         .groupBy("o_orderpriority")
@@ -102,7 +103,7 @@ def q_group_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.4 A2 (group-sum multi-column) + min/max/avg widening",
 )
 def q_group_sum_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["lineitem"]
         .groupBy("l_suppkey")
@@ -140,7 +141,7 @@ def q_group_sum_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.3 J1 (full-outer equi-join + key coalesce; reference spark-scripts/spark-project.py:75-80)",
 )
 def q_full_outer_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     cust = t["customer"].groupBy(F.col("c_nationkey").alias("cnk")).agg(
         F.count(F.lit(1)).alias("customers")
     )
@@ -188,7 +189,7 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full 18-query bench process, not in isolation: shared-JVM
     GC/codegen-cache pressure, not a plan change.
     """
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     per_order = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -240,7 +241,7 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.3 declared widening: left-anti join",
 )
 def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     urgent = t["orders"].filter(F.col("o_orderpriority") == "1-URGENT")
     return (
         t["customer"]
@@ -263,7 +264,7 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.3 declared widening: left-semi join",
 )
 def q_high_value_customers_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     big = t["orders"].filter(F.col("o_totalprice") > 300000)
     return (
         t["customer"]
@@ -289,7 +290,7 @@ def q_high_value_customers_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.6 O1 (multi-key desc sort) + O2 (limit) = global top-k",
 )
 def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     # orderBy().limit() compiles to TakeOrderedAndProject — a per-partition
     # top-k + driver merge, no global sort shuffle at any scale.
     return (
@@ -321,7 +322,7 @@ def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.5 W2 (rank after sort, partitioned) — top-k per group",
 )
 def q_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return (
         t["customer"]
@@ -350,7 +351,7 @@ def q_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.5 declared widening: lag/lead analytic windows",
 )
 def q_order_gaps_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     prev = F.lag("o_orderdate").over(w)
     return (
@@ -383,7 +384,7 @@ def q_order_gaps_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.5 declared widening: rank/dense_rank + running frame",
 )
 def q_part_price_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w_rank = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"))
     w_run = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.asc("p_partkey")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -425,7 +426,7 @@ def q_part_price_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.7 U1 + declared intersect/except widening",
 )
 def q_custkey_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     seg = t["customer"].filter(F.col("c_mktsegment") == "BUILDING").select(
         F.col("c_custkey")
     )
@@ -457,7 +458,7 @@ def q_custkey_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.4 declared widening: rollup grouping sets",
 )
 def q_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     joined = (
         t["customer"]
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -487,7 +488,7 @@ def q_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.4 declared widening: cube grouping sets",
 )
 def q_cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["lineitem"]
         .cube("l_returnflag", "l_linestatus")
@@ -524,7 +525,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both date predicates and the segment filter must reach the scans
     (pushdown); customer is the selective side — Catalyst/AQE picks the
     join order, nothing is hinted (every input grows with SF)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     cutoff = F.lit("1998-06-01 00:00:00").cast("timestamp")
     return (
         t["customer"]
@@ -583,7 +584,7 @@ def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     query in the round-4 single-pass bench was harness jitter, not
     plan cost.
     """
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     per_order = (
         t["lineitem"]
         .filter(F.col("l_returnflag") == "R")
@@ -638,7 +639,7 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One month of lineitem joined to part: the date filter prunes the
     fact scan; part is joined on its key with no hint (grows with SF —
     AQE broadcasts when it fits, shuffles when it doesn't)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         t["lineitem"]
@@ -673,7 +674,7 @@ def q_distinct_customers_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the skewed-hot-key case where the direct form straggles."""
     from ..operators.skew import salted_count_distinct
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return salted_count_distinct(
         t["orders"], ["o_orderpriority"], "o_custkey", n_salts=16
     ).orderBy("o_orderpriority")
@@ -698,7 +699,7 @@ def q_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale path swaps in percentile_approx with a documented tolerance —
     exact percentile is a full sort per group and is the right default
     only when groups are few (3 flags here)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     agg = [
         F.round(F.expr(f"percentile(l_extendedprice, {q})"), 4).alias(f"p{int(q * 100)}")
         for q in (0.25, 0.50, 0.75, 0.99)
@@ -722,7 +723,7 @@ def q_pivot_qty_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with an EXPLICIT value list — the implicit form runs an
     extra distinct-collect job over the pivot column, which is a full
     scan at 100 TB; declaring values keeps it one pass."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["lineitem"]
         .groupBy("l_returnflag")
@@ -751,7 +752,7 @@ def q_order_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution windows per priority class; (o_totalprice,
     o_orderkey) ordering is tiebreak-complete so bucket boundaries are
     reproducible across engines and partitionings."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return (
         t["orders"]
@@ -789,7 +790,7 @@ def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark plans the IN-subquery as a broadcast-able semi join on the
     pre-aggregated order totals — one lineitem shuffle on l_orderkey
     shared by the HAVING aggregate and the final per-order rollup."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     big = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -823,7 +824,7 @@ def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.4 widening: TPC-H Q17 shape (correlated scalar subquery)",
 )
 def q_small_qty_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     li = t["lineitem"]
     half_avg = (
         li.groupBy("l_partkey").agg((F.avg("l_quantity") * 0.5).alias("half_avg"))
@@ -865,7 +866,7 @@ def q_small_qty_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.3 widening: TPC-H Q21 shape (EXISTS + NOT EXISTS decorrelation)",
 )
 def q_lone_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     li = t["lineitem"].join(
         t["orders"].select("o_orderkey", "o_orderdate"),
         F.col("l_orderkey") == F.col("o_orderkey"),
@@ -918,7 +919,7 @@ def q_priority_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the orders-filtered lineitem scan; the date window is pushed to the
     orders parquet scan so the semi join's build side is six months of
     keys, not the whole table."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     o = t["orders"].filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
@@ -963,7 +964,7 @@ def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     (same key as the join, so AQE coalesces into one exchange); the
     second groups the tiny count-histogram — its shuffle is bounded by
     the distinct count values, independent of table size."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     non_urgent = t["orders"].filter(F.col("o_orderpriority") != "1-URGENT")
     per_cust = (
         t["customer"]
@@ -1010,7 +1011,7 @@ def q_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (no driver-side collect); NOT EXISTS is a LEFT ANTI join on
     o_custkey. At scale the anti join's right side projects only the
     join key, so the shuffle carries 8 bytes per order."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     avg_bal = (
         t["customer"].filter(F.col("c_acctbal") > 0.0).agg(F.avg("c_acctbal").alias("ab"))
     )
@@ -1060,7 +1061,7 @@ def q_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands right after them, so the only real shuffles are the
     fact-side equi-joins; the final agg groups a handful of
     (nation, nation, year) cells."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     n1 = F.broadcast(t["nation"].select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")))
     n2 = F.broadcast(t["nation"].select(
@@ -1111,7 +1112,7 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than rescanning lineitem). Rounding happens per-supplier
     BEFORE the max equality on both sides, keeping the comparison on
     identical values."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     revenue = (
         t["lineitem"]
         .filter(
@@ -1157,7 +1158,7 @@ def q_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast — the exclusion list is tiny); the distinct count
     shuffles (brand, type, size, suppkey) once, partial-deduped
     map-side."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     deficit = t["supplier"].filter(F.col("s_acctbal") < 0).select("s_suppkey")
     p = t["part"].filter(
         (F.col("p_brand") != "Brand#13")
@@ -1213,7 +1214,7 @@ def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     — then an unpivot to (check_name, violations). No per-check scans,
     no collect; adding a constraint adds a column to an existing agg,
     not a pass over the table."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     o = t["orders"].agg(
         F.sum(F.when(F.col("o_custkey").isNull(), 1).otherwise(0)).alias(
             "orders_null_custkey"
@@ -1279,7 +1280,7 @@ def q_customer_name_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     edit-distance verify only within blocks — never an all-pairs theta
     join. One shuffle on the block key; block size bounds the verify
     cost, exactly like the simhash/minhash band buckets."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     c = t["customer"].filter(F.col("c_custkey") % 10 < 3).select(
         "c_custkey", "c_name", F.substring("c_name", 1, 17).alias("blk")
     )
@@ -1323,7 +1324,7 @@ def q_order_qty_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     traces) a 100 TB log table needs. Integer math keeps the HOF
     reduction bit-identical to the oracle's list_sum. The key sample
     bounds fixture output."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     arr = F.array_sort(
         F.collect_list(F.struct(F.col("l_linenumber"), F.col("l_quantity").cast("int").alias("q")))
     )
@@ -1384,7 +1385,7 @@ def q_sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Levenshtein verifies only inside the w-neighborhood, as before."""
     from ..operators import sampling as smp
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w = 3
     ranked = smp.distributed_row_number(
         t["customer"].filter(F.col("c_custkey") % 10 < 3).select("c_custkey", "c_name"),
@@ -1437,7 +1438,7 @@ def q_status_reconciliation_nullsafe(spark: SparkSession, sf_dir: str) -> DataFr
     (NULLs co-partition like any other value) — same shuffle shape as a
     plain equi-join, none of the null-dropping. The open-status bucket
     is mapped to NULL on both sides to make the hazard explicit."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     o = (
         t["orders"]
         .select(F.when(F.col("o_orderstatus") == "O", None)
@@ -1479,7 +1480,7 @@ def q_cheapest_part_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The correlated scalar subquery decorrelates to one brand-keyed
     min aggregate (bounded: one row per brand) broadcast back against
     the table — one scan + one tiny join, never a per-row subquery."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     mins = t["part"].groupBy(F.col("p_brand").alias("mb")).agg(
         F.min("p_retailprice").alias("min_price")
     )
@@ -1519,7 +1520,7 @@ def q_market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Numerator and denominator are two conditional sums in ONE
     aggregation pass (never two scans + a join); nation broadcasts,
     supplier/orders join on their uniform fact keys."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         t["lineitem"]
@@ -1570,7 +1571,7 @@ def q_product_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFra
     """The selective p_type filter lands on the part scan (pushdown)
     BEFORE its join, shrinking the fact stream early; nation broadcasts;
     the rollup groups a bounded (nation x year) grid."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     profit_cents = F.round(
         (
             F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -1621,7 +1622,7 @@ def q_disjunctive_pred_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join stays equi (no nested-loop fallback), and derives a
     partial part-side filter (brand IN ...) pushed to the part scan;
     the residual OR evaluates post-join. Single-row result."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     p, li = t["part"], t["lineitem"]
     cond = (
         ((F.col("p_brand") == "Brand#11") & F.col("p_size").between(1, 5)
@@ -1670,7 +1671,7 @@ def q_excess_shipped_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partkey)-keyed quantity rollup -> HAVING -> distinct suppliers as a
     LEFT SEMI join against the supplier dim. Every shuffle keys on
     uniform fact keys; the semi probe side is the small aggregate."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     shipped = (
         t["lineitem"]
         .filter(
@@ -1712,7 +1713,7 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     value is the plan: every predicate must reach the parquet scan as a
     PushedFilter and the aggregate is a map-side partial + 1-row final
     — the I/O-bound floor any 100 TB engine should hit."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["lineitem"]
         .filter(
@@ -1757,7 +1758,7 @@ def q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial aggregation collapses everything before the final
     exchange. The join predicate references both sides so it cannot
     push to either scan; the shuffle is the orderkey equi-join only."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     urgent = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         t["lineitem"]
@@ -1818,7 +1819,7 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL is the naive form this replaces). Exact multi-column
     distinct plans as Expand with map-side partials; the documented
     100 TB swap is approx_count_distinct."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     from ..operators.profiling import profile
 
     return profile(t["orders"], _PROFILE_COLS).orderBy("column_name")
@@ -1874,7 +1875,7 @@ def q_revenue_trend_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle that collapses to |nations|·|years| rows, then a
     |nations|-row moment rollup — nothing downstream of the first
     aggregate sees data volume."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     yearly = (
         t["orders"]
         .join(F.broadcast(t["customer"].select("c_custkey", "c_nationkey")),
@@ -1962,7 +1963,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     custkey aggregation feeding three |customers|-row rank passes."""
     from ..operators.sampling import distributed_row_number
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     base = (
         t["orders"]
         .groupBy("o_custkey")
@@ -2070,7 +2071,7 @@ def q_brand_affinity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lift = pair·total/(nₐ·n_b) as one fixed-order double chain over
     exact integer counts. Self-join sides are built from independent
     subquery aliases (the Spark 4 self-join rewrite gotcha)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return brand_affinity(t["lineitem"], t["part"], k=15)
 
 
@@ -2200,7 +2201,7 @@ def q_revenue_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer cents."""
     from ..operators.sampling import distributed_row_number, tiny_global_window
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     per_cust = (
         t["orders"]
         .groupBy("o_custkey")
@@ -2286,7 +2287,7 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows with map-side partial aggregation, instead of three scans
     unioned). Dims broadcast onto the orders scan; revenue rides as
     exact integer cents."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     j = (
         t["orders"]
         .join(
@@ -2303,7 +2304,6 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
     )
-    j.createOrReplaceTempView("__gs_revenue_input")
     return spark.sql(
         """
         SELECT nation, yr,
@@ -2314,10 +2314,11 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                -- strict string hash rejects against DuckDB's DOUBLE
                ROUND(SUM(cents) / CAST(100.0 AS DOUBLE), 2)
                  + CAST(0.0 AS DOUBLE) AS revenue
-        FROM __gs_revenue_input
+        FROM {j}
         GROUP BY GROUPING SETS ((nation), (yr), ())
         ORDER BY nation ASC NULLS FIRST, yr ASC NULLS FIRST
-        """
+        """,
+        j=j,
     )
 
 
@@ -2365,7 +2366,7 @@ def q_fd_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     unioned, each map-side-partial, nothing downstream sees data
     volume. The profiling primitive behind key inference,
     denormalization and join-safety checks."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
 
     def fd(name: str, df: DataFrame, lhs: str, rhs: str) -> DataFrame:
         per = df.groupBy(lhs).agg(F.countDistinct(rhs).alias("n_rhs"))
@@ -2449,7 +2450,7 @@ def q_revenue_trend_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE divisions of exact integer cents; the median is the explicit
     rank selection (no quantile interpolation). AVG over the 1–2
     middle rows is commutative-exact."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     yearly = (
         t["orders"]
         .join(
@@ -2546,7 +2547,7 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan — expectations are Python-computed literals). One 9-key
     count; everything after is metadata-sized; each share is one
     double division."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     digit = F.substring(
         F.round(F.col("o_totalprice") * 100).cast("long").cast("string"), 1, 1
     ).cast("long")
@@ -2614,7 +2615,7 @@ def q_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays everything."""
     from ..operators.sampling import distributed_row_number
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     per_cust = (
         t["orders"]
         .groupBy("o_custkey")
@@ -2684,7 +2685,7 @@ def q_part_price_boxplot(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one rollup; at 100 TB swap the rank window for approx_percentile
     per brand (documented, tests/test_approx.py covers the sketch
     path)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     p = t["part"].select(
         "p_brand",
         "p_partkey",
@@ -2762,7 +2763,7 @@ def q_snapshot_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the classification exactly; the same code path diffs two
     real snapshot directories. Exact integer cents throughout; the
     join shuffles once on the PK and the rollup key is 4 values."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     a = t["orders"].select(
         F.col("o_orderkey").alias("okey"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -2832,7 +2833,7 @@ def q_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     is 7·wd/total over exact integer cents, avoiding any float mean.
     Spark weekday()+1 ≡ DuckDB isodow (the engine-aligned convention
     from activity_heatmap)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     wd = (
         t["orders"]
         .groupBy((F.weekday("o_orderdate") + 1).cast("long").alias("dow"))
@@ -2896,7 +2897,7 @@ def q_brand_hhi_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     across a shuffle (new pattern beside integer cents and rank
     selection). Everything upstream is the usual exact-cent integer
     aggregation with a broadcast part dim."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     by_brand = (
         t["lineitem"]
         .join(
@@ -2972,7 +2973,7 @@ def q_supplier_latency_league(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division and the cut ranks on the ROUNDED mean with a
     suppkey tiebreak. Supplier names broadcast onto the 10-row-bound
     result path."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     d = (
         t["lineitem"]
         .select("l_suppkey", "l_orderkey", "l_shipdate")
@@ -3109,7 +3110,7 @@ def q_revenue_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition no matter the corpus. The statistical contract is pinned
     by tests/test_extended_ops.py::test_bootstrap_ci_brackets_mean.
     """
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     seeded = t["orders"].select(
         F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("cents"),
         F.expr(

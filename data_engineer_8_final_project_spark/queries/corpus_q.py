@@ -14,8 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import catalog
 from ..operators import sampling, text
-from ..registry import register, tables_for
+from ..registry import register
 from ..stage import stage_frame
 
 _DUCK_TOKENS = "string_split(trim(text), ' ')"
@@ -65,7 +66,7 @@ def q_ngram_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits without ever materializing pairs. At 100 TB both sides
     partition by gram hash; Zipf-hot grams are exactly what AQE skew
     handling splits."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     # r16: split is a pure function of doc_id — column expression, not
     # a self-join of documents on doc_id (exchange + join gone).
     grams = (
@@ -121,7 +122,7 @@ def q_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank + broadcast offsets) — a natural-language vocabulary is small,
     but a byte-BPE/URL/code vocabulary at 100 TB is not, and the rank
     must never serialize it through one task."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     counts = (
         t["documents"]
         .select(F.explode(text.tokens("text")).alias("token"))
@@ -175,7 +176,7 @@ def q_tfidf_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size is a 1-row broadcast aggregate (lazy, off the driver);
     the per-document top-3 window partitions by doc_id, so ranking
     scales with documents, not corpus size."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     tok = t["documents"].select("doc_id", F.explode(text.tokens("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -228,7 +229,7 @@ def q_lang_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast aggregate over the (tiny) per-lang counts. Nothing else
     moves — the weights table is what a sampler joins back against the
     corpus, broadcast."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     c = t["documents"].groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     tot = c.agg(
         F.sum("n_docs").cast("double").alias("total"),
@@ -299,7 +300,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import text
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["documents"]
         .select("doc_id", text.tokens("text").alias("t"))
@@ -360,7 +361,7 @@ def q_vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE), then one doc-keyed rollup."""
     from ..operators import text
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     tok = t["documents"].select("doc_id", F.explode(text.tokens("text")).alias("token"))
     vocab = (
         tok.groupBy("token")
@@ -467,7 +468,7 @@ def q_bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates. The per-doc score is a fixed-order literal expression —
     no float sum rides a shuffle, so the result is width-invariant and
     the oracle replays it bit-exact."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     docs = t["documents"].select(
         "doc_id", F.size(text.tokens("text")).cast("long").alias("dl")
     )
@@ -555,7 +556,7 @@ def q_lang_source_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROW (never a float sum across rows). Scale shape: one (lang,
     source) aggregation plus two margin aggregates broadcast back onto
     the 100-cell frame; N enters as a bounded scalar probe."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     docs = t["documents"].select("lang", "source")
     n = docs.count()  # bounded scalar probe
     cells = docs.groupBy("lang", "source").agg(
@@ -617,7 +618,7 @@ def q_quality_percentile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-stable and pct is one double division of exact integers."""
     from ..operators.sampling import distributed_row_number
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     scored = t["documents"].select(
         "doc_id",
         F.round(
@@ -674,7 +675,7 @@ def q_token_prefix_completions(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix into the exchange, so a hot prefix's shuffle input is
     bounded by 3×partitions, never by its token count. The same
     rank-limit shape as per_key_cap, exercised on a text workload."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     tok = t["documents"].select(F.explode(text.tokens("text")).alias("token"))
     counts = (
         tok.filter(F.length("token") >= 4)
@@ -757,7 +758,7 @@ def q_token_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-token frame scales, and a production flow reads back only
     candidate tokens, not the vocabulary.
     """
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     tok = t["documents"].select(
         F.explode(F.split(F.trim(F.col("text")), " ")).alias("token")
     )

@@ -17,9 +17,9 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import parquet_row_count
+from .. import catalog
 from ..operators import dedup, sampling, similarity, text
-from ..registry import register, tables_for
+from ..registry import register
 
 # DuckDB token/shingle fragments mirrored from operators/text.py
 _DUCK_TOKENS = "string_split(trim(text), ' ')"
@@ -51,7 +51,7 @@ _DUCK_STOPWORDS = "['the', 'a', 'of', 'and', 'to', 'in']"
     tags=("bench",),
 )
 def q_text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["documents"]
         .groupBy("lang")
@@ -84,7 +84,7 @@ def q_text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: per-document quality scoring",
 )
 def q_doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         text.quality_metrics(t["documents"])
         .select(
@@ -112,7 +112,7 @@ def q_doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["documents"]
         .select(F.explode(text.tokens("text")).alias("token"))
@@ -138,7 +138,7 @@ def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: language-ID marker heuristic",
 )
 def q_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["documents"]
         .groupBy("lang", text.lang_id_heuristic("text").alias("guessed"))
@@ -157,7 +157,7 @@ def q_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: document fingerprinting (content hash)",
 )
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["documents"]
         .select(
@@ -187,7 +187,7 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: exact dedup (hash-groupBy)",
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return dedup.exact_dedup_groups(t["documents"]).orderBy("canonical_doc_id")
 
 
@@ -224,7 +224,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def q_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         dedup.jaccard_candidate_pairs(t["documents"], shingle_n=3, min_shared=2, max_df=100)
         .orderBy(F.desc("jaccard"), F.asc("doc_a"), F.asc("doc_b"))
@@ -280,7 +280,7 @@ def q_dedup_attrition_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs_dropped under the min-id greedy) from ONE pair pass + a
     literal-threshold explode (operators/dedup.dedup_attrition_curve) —
     the tuning sweep run before committing a corpus dedup threshold."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return dedup.dedup_attrition_curve(t["documents"]).orderBy("threshold")
 
 
@@ -330,7 +330,7 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting-list blocking core (operators/dedup.containment_pairs);
     reference has no text dedup at all — this extends the
     training-data-pipeline surface (brief: dedup family)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         dedup.containment_pairs(
             t["documents"], shingle_n=3, min_shared=2, max_df=100, threshold=0.3
@@ -377,7 +377,7 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # strictly faster; the candidate-recall gate lives in tests/test_dedup.py
 )
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return dedup.minhash_lsh_verified_pairs(t["documents"])
 
 
@@ -433,7 +433,7 @@ def _simhash_oracle(max_hamming: int) -> str:
     survey_ref="extended: SimHash near-dup pairs (diagnostic; banded LSH over 60-bit signatures)",
 )
 def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return dedup.simhash_near_dup_pairs(t["documents"], max_hamming=12)
 
 
@@ -470,7 +470,7 @@ def _simhash_verdict_oracle(max_hamming: int) -> str:
     tags=("bench",),
 )
 def q_simhash_dedup_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return dedup.simhash_dedup_verdicts(t["documents"], max_hamming=12).orderBy(
         "doc_id"
     )
@@ -546,7 +546,7 @@ def _minhash_native_oracle(
     tags=("bench",),
 )
 def q_minhash_native_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return dedup.minhash_native_pairs(t["documents"]).orderBy("doc_a", "doc_b")
 
 
@@ -574,7 +574,7 @@ def q_minhash_native_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: brute-force cosine top-k (similarity baseline)",
 )
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.brute_force_topk(t["embeddings"], query_vec_id=0, k=10)
 
 
@@ -633,7 +633,7 @@ def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks). k bounded driver probes, each step one distributed scan +
     TakeOrdered(1) (operators/similarity.mmr_topk); reference has no
     similarity surface — extends the brief's training-data family."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.mmr_topk(
         t["embeddings"], query_vec_id=0, k=8, lam=0.7, div=0.3
     ).orderBy("mmr_rank")
@@ -657,7 +657,7 @@ def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: embedding-cosine near-dup (all-pairs baseline)",
 )
 def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.cosine_near_dup_pairs(t["embeddings"], threshold=0.45).orderBy(
         "vec_a", "vec_b"
     )
@@ -697,7 +697,7 @@ def _ann_lsh_oracle(query_vec_id: int, dim: int, k: int, n_planes: int) -> str:
     survey_ref="extended: LSH-bucketed ANN top-k (scale path)",
 )
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.ann_lsh_topk(t["embeddings"], query_vec_id=0, dim=64, k=10)
 
 
@@ -747,7 +747,7 @@ def _ivf_oracle(query_vec_id: int, n_cells: int, n_probe: int, k: int) -> str:
     tags=("bench",),
 )
 def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.ivf_topk(t["embeddings"], query_vec_id=0, n_cells=16, n_probe=4, k=10)
 
 
@@ -831,7 +831,7 @@ def _ann_recall_oracle(
     survey_ref="extended: ANN recall@k evaluation (IVF vs brute-force ground truth, batched queries)",
 )
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.ann_recall_eval(
         t["embeddings"], RECALL_QUERY_IDS, n_cells=16, n_probe=4, k=10
     )
@@ -944,7 +944,7 @@ def q_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     RECALL_QUERY_IDS sample — quantization is where recall silently
     dies at scale, so the compressed tiers carry their own registered
     recall metric alongside IVF-Flat's ann_recall_eval."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.pq_recall_eval(
         t["embeddings"], RECALL_QUERY_IDS, dim=64, n_sub=8, n_codes=32,
         shortlist=100, k=10,
@@ -1034,7 +1034,7 @@ def q_ivf2_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaf routing cuts the per-row assignment from n_cells·dim to
     (n_parents + group)·dim dot terms — the quantizer that stays flat
     as leaf counts grow past 1024 at 100 TB corpus scale."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.ivf2_topk(
         t["embeddings"],
         query_vec_id=0,
@@ -1119,7 +1119,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-Quantization ADC top-k — the compressed ANN tier
     (operators/similarity.pq_topk): 64-double vectors quantized to 8
     seeded-codebook codes; ADC shortlist of 100, exact-cosine re-rank."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.pq_topk(
         t["embeddings"], query_vec_id=0, dim=64, n_sub=8, n_codes=32, shortlist=100, k=10
     )
@@ -1227,7 +1227,7 @@ def q_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     score them, exact re-rank caps the error — the FAISS ``IVF16,PQ8``
     serving shape. Zero joins/shuffles: the probe set is driver-derived
     from model parameters and inlined as a literal isin filter."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.ivfpq_topk(
         t["embeddings"], query_vec_id=0, n_cells=16, n_probe=4, dim=64,
         n_sub=8, n_codes=32, shortlist=100, k=10,
@@ -1439,7 +1439,7 @@ def _knn_cells(sf_dir: str) -> tuple[int, int | None]:
     pins the exact flat argmin for oracle verification at any size
     (the scale scripts, which compare wall-clock rather than hashes,
     keep the routing arm)."""
-    n = parquet_row_count(os.path.join(sf_dir, "embeddings.parquet"))
+    n = catalog.parquet_row_count(os.path.join(sf_dir, "embeddings.parquet"))
     nc = similarity.derived_n_cells(n)
     parents = similarity.routing_parents(nc)
     if parents is not None and os.environ.get("SPARK_GRAFT_KNN_ROUTING") == "flat":
@@ -1502,7 +1502,7 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's labels are synthetic (independent of the vectors), so
     measured accuracy is chance — the gate is the exact vote replay,
     not model quality."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     emb = t["embeddings"]
     nc, npar = _knn_cells(sf_dir)
     g = similarity.knn_graph(emb, n_cells=nc, k=3, n_parents=npar)
@@ -1543,7 +1543,7 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide k-NN graph (every vector's top-3 cell-local
     neighbors) — the batch build step clustering / SemDeDup / label
     propagation consume, vs the single-query ANN tiers."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     nc, npar = _knn_cells(sf_dir)
     return similarity.knn_graph(
         t["embeddings"], n_cells=nc, k=3, n_parents=npar
@@ -1648,7 +1648,7 @@ def q_knn_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical at any shuffle width and under the DuckDB oracle."""
     from ..operators import clusters
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     emb = t["embeddings"]
     nc, npar = _knn_cells(sf_dir)
     g = similarity.knn_graph(emb, n_cells=nc, k=3, n_parents=npar).select("src", "dst")
@@ -1673,7 +1673,7 @@ def q_knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     one dst-keyed integer sum."""
     from ..operators import clusters
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     emb = t["embeddings"]
     nc, npar = _knn_cells(sf_dir)
     g = similarity.knn_graph(emb, n_cells=nc, k=3, n_parents=npar).select("src", "dst")
@@ -1693,7 +1693,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-blocked embedding dedup — k-means cells bound the pair
     stage, cell assignment is a zero-shuffle literal-centroid argmin
     (operators/similarity.semantic_dedup_verdicts)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.semantic_dedup_verdicts(
         t["embeddings"], n_cells=16, threshold=0.45
     ).orderBy("vec_id")
@@ -1723,7 +1723,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: banded-LSH near-dup pairs (subquadratic scale path)",
 )
 def q_lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.lsh_near_dup_pairs(t["embeddings"], dim=64, threshold=0.45).orderBy(
         "vec_a", "vec_b"
     )
@@ -1746,7 +1746,7 @@ BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
     survey_ref="extended: BPE-ish regex tokenization (pre-merge token counts)",
 )
 def q_bpe_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["documents"]
         .select(F.explode(F.regexp_extract_all("text", F.lit(BPE_PATTERN), 0)).alias("token"))
@@ -1799,7 +1799,7 @@ def q_doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     The repartition is both the optimization barrier and the
     parallelism spread (same single-file-scan issue as dedup._spread)."""
     w = 4
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     sh = text.shingles("text", 3)
     hs = F.transform(
@@ -1846,7 +1846,7 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_extended_ops.py proves the applyInPandas (grouped-map) version
     computes the same thing; the native one is registered because
     nothing here needs Python."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["embeddings"]
         .select("label", F.posexplode(F.col("embedding").cast("array<double>")))
@@ -1874,7 +1874,7 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse runs, trim — all codegen'd regexp_replace (Spark replaces
     globally by default; the oracle needs DuckDB's 'g' flag). Output is
     the md5 of the normal form, i.e. the case/punct-insensitive dedup key."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     norm = F.trim(
         F.regexp_replace(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "), " +", " ")
     )
@@ -1903,7 +1903,7 @@ def q_unpivot_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DataFrame.unpivot (melt) API — wide columns to (metric,
     value) rows; the oracle is the equivalent UNION ALL. Values unify
     to DOUBLE (unpivot requires a common value type)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["orders"]
         .select(
@@ -1955,7 +1955,7 @@ def q_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality gates (length, stopword ratio) → canonical normalization →
     exact dedup on the normal form keeping the lowest doc_id. One scan,
     one shuffle (the dedup groupBy on the 32-byte norm_fp key)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     c = F.col("text")
     n_tok = text.token_count(c)
     stop_ratio = text.stopword_count(c) / n_tok
@@ -2015,6 +2015,12 @@ ORDER BY c_custkey, chain_start
 """
 
 
+#: the same text with its one table reference as a ``spark.sql``
+#: DataFrame placeholder, bound to the orders frame of the query's own
+#: ``sf_dir`` rather than to whatever session view is named ``orders``
+_ORDER_CHAINS_SPARK_SQL = ORDER_CHAINS_RECURSIVE_SQL.replace("FROM orders\n", "FROM {orders}\n")
+
+
 @register(
     "order_chains_recursive",
     oracle=ORDER_CHAINS_RECURSIVE_SQL,
@@ -2022,7 +2028,8 @@ ORDER BY c_custkey, chain_start
     tags=("bench",),
 )
 def q_order_chains_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runs ORDER_CHAINS_RECURSIVE_SQL verbatim — the oracle IS the
+    """Runs ORDER_CHAINS_RECURSIVE_SQL with only its table reference
+    bound to this ``sf_dir``'s orders frame — the oracle IS the
     query, so the gate proves Spark's recursive-CTE execution agrees
     with DuckDB's on the same logic, not just that two translations
     agree. Scale shape: the recursion seeds from anchors (one window
@@ -2040,16 +2047,16 @@ def q_order_chains_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     the returned lazy frame, after this function exits), and a larger
     governor left on the session is harmless — it gates only recursive
     CTEs, and only ever widens."""
-    tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     key = "spark.sql.cteRecursionRowLimit"
     # bound: every chain row is a distinct (anchor, order) pair walked
     # forward, so output rows <= orders rows; double it for headroom.
     # The count comes from parquet footer metadata — a bound, not an
     # answer, must not cost an eager full-table Spark job per call.
-    n_orders = parquet_row_count(os.path.join(sf_dir, "orders.parquet"))
+    n_orders = catalog.parquet_row_count(os.path.join(sf_dir, "orders.parquet"))
     current = int(spark.conf.get(key))
     spark.conf.set(key, str(max(current, 2 * n_orders)))
-    return spark.sql(ORDER_CHAINS_RECURSIVE_SQL)
+    return spark.sql(_ORDER_CHAINS_SPARK_SQL, orders=t["orders"])
 
 
 @register(
@@ -2083,7 +2090,7 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-row state) and one uniform-key count aggregation with
     map-side partial combine; top-k via TakeOrdered. Scales like any
     token count: linear scan, shuffle bounded by |distinct pairs|."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["documents"]
         .select(F.regexp_extract_all("text", F.lit(BPE_PATTERN), 0).alias("t"))
@@ -2167,7 +2174,7 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as in SemDeDup."""
     from ..operators.sampling import hash_bucket
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     emb = t["embeddings"].select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -2277,7 +2284,7 @@ def q_knn_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle counts and local clustering coefficient
     (operators/similarity.knn_triangle_stats) — degree-bounded by the
     k-NN construction, so the triangle joins stay linear."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     nc, npar = _knn_cells(sf_dir)
     return similarity.knn_triangle_stats(
         t["embeddings"], n_cells=nc, k=3, n_parents=npar
@@ -2391,7 +2398,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     — integer fixed-point throughout, so the run is deterministic on
     any shuffle width). Output carries the exact integer distance so
     the oracle verifies the geometry, not just the partition."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     from ..operators import clusters
 
     return clusters.kmeans_fixed_point(t["embeddings"], k=8, rounds=2).orderBy("vec_id")
@@ -2408,7 +2415,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster, picked by stable md5 order
     (operators/sampling.cluster_balanced_sample) — the learned-key twin
     of per_key_cap, with the same map-side WindowGroupLimit quota."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return sampling.cluster_balanced_sample(
         t["embeddings"], k=8, rounds=2, cap=50
     ).orderBy("cluster", "pick_rank")
@@ -2458,7 +2465,7 @@ def q_maxsim_multivector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ_q max_t <query-token, doc-token> over 4 token sub-vectors
     (operators/similarity.maxsim_topk) — integer fixed-point, literal
     query tokens, map-side scan + TakeOrderedAndProject top-k."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.maxsim_topk(
         t["embeddings"], query_vec_id=0, n_tokens=4, k=10
     ).orderBy(F.desc("score"), F.asc("vec_id"))
@@ -2517,7 +2524,7 @@ def q_knn_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     constraint of the whole knn family."""
     from ..operators import clusters
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     emb = t["embeddings"]
     nc, npar = _knn_cells(sf_dir)
     g = similarity.knn_graph(emb, n_cells=nc, k=3, n_parents=npar).select("src", "dst")
@@ -2574,7 +2581,7 @@ def q_quality_model_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Entirely map-side — one scan, zero shuffles before the
     presentation sort; 100 TB cost is the scan itself. Swapping in a
     real trained model changes the literals, not the plan."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     q = text.quality_metrics(t["documents"]).select(
         "doc_id", "n_tokens", "type_token_ratio", "stopword_ratio", "avg_token_len"
     )
@@ -2643,7 +2650,7 @@ def q_pq_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point, map-side literal-matrix encode, one scan + one 1-row
     aggregate unpivoted via stack. The report a serving stack watches
     to know WHICH subspace's codebook to retrain."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.pq_reconstruction_error(
         t["embeddings"], dim=64, n_sub=8, n_codes=16
     ).orderBy("subspace")
@@ -2702,7 +2709,7 @@ def q_knn_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays linear; all integers, oracle unrolls the rounds."""
     from ..operators import clusters
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     emb = t["embeddings"]
     nc, npar = _knn_cells(sf_dir)
     g = similarity.knn_graph(emb, n_cells=nc, k=3, n_parents=npar).select("src", "dst")
@@ -2767,7 +2774,7 @@ def q_embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated / double-scaled vectors before they poison ANN recall.
     Rank-exact medians (no engine quantile interpolation), broadcast
     per-label stats, integer norms."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.embedding_norm_outliers(t["embeddings"]).orderBy("label")
 
 
@@ -2867,7 +2874,7 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative at 100 TB. Self-join goes through subquery aliases
     (the Spark 4 attribute-rewrite gotcha).
     """
-    moments = _embedding_moments(tables_for(spark, sf_dir)["embeddings"])
+    moments = _embedding_moments(catalog.tables(spark, sf_dir)["embeddings"])
     return moments.select(
         F.col("i").cast("long").alias("i"),
         F.col("j").cast("long").alias("j"),
@@ -2984,7 +2991,7 @@ def q_embedding_pca_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     emb = t["embeddings"]
     # bounded collect: 2080 moment rows = the 64x64 model, not data
     rows = (

@@ -10,8 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import catalog
 from ..operators.standings import NULL_SCORE_MOD, SCORE_MOD, standings
-from ..registry import register, tables_for
+from ..registry import register
 
 STANDINGS_ORACLE = f"""
 WITH m AS (
@@ -71,4 +72,4 @@ ORDER BY league, id
     tags=("flagship", "bench"),
 )
 def q_standings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return standings(tables_for(spark, sf_dir))
+    return standings(catalog.tables(spark, sf_dir))

@@ -13,8 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import catalog
 from ..operators import multimodal
-from ..registry import register, tables_for
+from ..registry import register
 
 _DUCK_MEDIA = """
       SELECT doc_id,
@@ -43,7 +44,7 @@ _DUCK_MEDIA = """
     survey_ref="extended: multimodal manifest (binary payload + typed metadata)",
 )
 def q_media_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     media = multimodal.media_from_documents(t["documents"])
     return multimodal.media_manifest(media).orderBy("doc_id")
 
@@ -69,7 +70,7 @@ def q_media_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: multimodal feature extraction (Arrow-batched mapInPandas)",
 )
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     media = multimodal.media_from_documents(t["documents"])
     return multimodal.media_feature_extract(media).orderBy("doc_id")
 
@@ -98,7 +99,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: multimodal frame sampling (chunked binary via mapInPandas)",
 )
 def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     media = multimodal.media_from_documents(t["documents"])
     return multimodal.sample_frames(media).orderBy("doc_id", "frame_no")
 
@@ -120,6 +121,6 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: multimodal decode stub (deterministic fake decoder)",
 )
 def q_media_decode_fake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     media = multimodal.media_from_documents(t["documents"])
     return multimodal.decode_media(media, deterministic_fake=True).orderBy("doc_id")

@@ -28,8 +28,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import catalog
 from ..operators.cleaning import clean_matches, league_standings
-from ..registry import register, tables_for
+from ..registry import register
 from ..sources import html
 
 DAY_CODES = ["Sa", "Su", "Mo", "Tu"]
@@ -147,7 +148,7 @@ def q_html_matches_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Render → save → spark.read.text-parse round trip of the scrape
     source. The fixture lands in a per-SF scratch dir (overwritten each
     run — content is deterministic, only the parse output is graded)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     raw = synth_matches_raw(t["lineitem"])
     path = os.path.join(
         tempfile.gettempdir(),
@@ -172,7 +173,7 @@ def q_html_matches_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.2 P1-P5, §2.8 F1-F8/F10, §2.4 A4 (full cleaning pipeline)",
 )
 def q_matches_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     cleaned = clean_matches(
         synth_matches_raw(t["lineitem"]),
         season_start_year=2024,
@@ -227,7 +228,7 @@ def q_matches_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.4 A3, §2.6 O1, §2.5 W2, §2.8 F12 (reference standings, native columns)",
 )
 def q_reference_standings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     cleaned = clean_matches(
         synth_matches_raw(t["lineitem"]),
         season_start_year=2024,

@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register, tables_for
+from .. import catalog
+from ..registry import register
 
 # --------------------------------------------------------------------------
 # Date functions (F4/F6/F10/F11 family)
@@ -41,7 +42,7 @@ from ..registry import register, tables_for
     survey_ref="§2.8 F6/F11 (date parts + arithmetic)",
 )
 def q_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["orders"]
         .groupBy(
@@ -73,7 +74,7 @@ def q_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.8 F2 (day-code dictionary map via when-chain)",
 )
 def q_day_name_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     # Spark dayofweek: 1=Sunday..7=Saturday.
     dow = F.dayofweek("o_orderdate")
     day_name = (
@@ -109,7 +110,7 @@ def q_day_name_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.8 F4 (month-based year inference)",
 )
 def q_season_year_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     season = (
         F.when(F.month("o_orderdate") <= 7, F.year("o_orderdate"))
         .otherwise(F.year("o_orderdate") + 1)
@@ -138,7 +139,7 @@ def q_season_year_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.2 P3 (completed-match date predicate, frozen as-of)",
 )
 def q_completed_before_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     cutoff = F.lit("1998-01-01 00:00:00").cast("timestamp") - F.expr("INTERVAL 1 DAY")
     return t["orders"].filter(F.col("o_orderdate") < cutoff).agg(
         F.count(F.lit(1)).alias("n_completed"),
@@ -204,7 +205,7 @@ def q_completed_before_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.8 F1/F3/F5/F7/F8 + §2.2 P1/P4 + §2.4 A4 (combined suite)",
 )
 def q_scalar_cleaning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
 
     # score_parse: split → try_cast halves (Spark 4 ANSI: plain cast
     # THROWS on 'pp.', getItem THROWS past end → F.get + try_cast give
@@ -315,7 +316,7 @@ def q_scalar_cleaning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import EVENT_PROPS
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["events"]
         .withColumn("k", F.from_json("props", EVENT_PROPS).getField("k").cast("long"))
@@ -351,7 +352,7 @@ def q_events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale VARIANT's binary encoding decodes fields without
     re-tokenizing the JSON text per access — the same reason the
     warehouse engines store semi-structured columns pre-parsed."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["events"]
         .withColumn("v", F.parse_json("props"))

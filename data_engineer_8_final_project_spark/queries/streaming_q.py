@@ -14,9 +14,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import staging
+from .. import catalog, staging
 from ..operators.funnel import batch_funnel
-from ..registry import register, tables_for
+from ..registry import register
 from ..streaming import events as ev
 from .flagship import STANDINGS_ORACLE
 
@@ -42,7 +42,7 @@ ORDER BY window_start, event_type
     survey_ref="§2.9 T3 (windowed agg, batch form — oracle for the stream)",
 )
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return ev.hourly_window_agg(t["events"]).orderBy("window_start", "event_type")
 
 
@@ -129,7 +129,7 @@ def q_standings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.standings import matches, pair_rollup, standings_from_pairs
     from ..schemas import LINEITEM
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     chunked = os.path.join(
         tempfile.gettempdir(),
         f"spark_graft_li_stream_{os.path.basename(sf_dir.rstrip('/'))}",
@@ -186,7 +186,7 @@ def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     same contract as user_totals_stateful)."""
     from ..operators.sessions import sessionize
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return sessionize(t["events"], gap_minutes=30).orderBy("user_id", "session_no")
 
 
@@ -215,7 +215,7 @@ ORDER BY window_start, event_type
     survey_ref="§2.9 T3 widening: sliding event-time windows (batch form)",
 )
 def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return ev.sliding_window_agg(t["events"]).orderBy("window_start", "event_type")
 
 
@@ -248,7 +248,7 @@ def q_clicks_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle for the union+running-window formulation."""
     from ..operators.asof import asof_backward_join
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     ev_t = t["events"]
     clicks = ev_t.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     errors = ev_t.filter(F.col("event_type") == "error").select("event_id", "user_id", "ts")
@@ -303,7 +303,7 @@ def q_purchases_in_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     one bucket, so no dedup; the oracle is the naive BETWEEN theta join."""
     from ..operators.sessions import bucketed_range_join, sessionize
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     purchases = t["events"].filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -340,7 +340,7 @@ def q_events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily (and grand-total) rollups via grouping sets — the batch
     analogue of a hypertable's hierarchical materialized aggregates.
     GROUPING() disambiguates rolled-up NULLs from data NULLs."""
-    tables_for(spark, sf_dir)  # registers the temp views
+    t = catalog.tables(spark, sf_dir)
     # partial rollup (plain event_type × ROLLUP(day, hour)) is SQL-only
     # surface — spark.sql IS the engine's other first-class API
     # day/hour NULL markers become 'ALL'/-1 sentinels: a NULL-bearing
@@ -354,10 +354,11 @@ def q_events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                event_type,
                COUNT(*) AS n_events,
                ROUND(SUM(value), 2) AS sum_value
-        FROM events
+        FROM {events}
         GROUP BY event_type, ROLLUP(CAST(date_trunc('day', ts) AS DATE), hour(ts))
         ORDER BY day, hour, event_type
-        """
+        """,
+        events=t["events"],
     )
 
 
@@ -449,7 +450,7 @@ def q_latest_event_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale this is the standard pre-merge step for a 100 TB CDC mirror:
     one shuffle on the primary key, map-side nothing, and the window
     never materializes more than a partition's rows."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.desc("ts"), F.desc("event_id")
     )
@@ -510,7 +511,7 @@ def q_events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     hours-of-history x types regardless of event volume; the left join
     back to the sparse rollup shuffles only the tiny grid and the
     already-aggregated hours, never raw events."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     h = (
         t["events"]
         .groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
@@ -558,8 +559,7 @@ def q_events_trailing_hour_window(spark: SparkSession, sf_dir: str) -> DataFrame
     self-join, no per-row scan. The event_id sample sits ABOVE the
     window (a non-partition-key filter never pushes below it), bounding
     driver-compare volume without changing any frame."""
-    t = tables_for(spark, sf_dir)
-    t["events"].createOrReplaceTempView("_ev_trail")
+    t = catalog.tables(spark, sf_dir)
     return spark.sql(
         """
         SELECT * FROM (
@@ -567,13 +567,14 @@ def q_events_trailing_hour_window(spark: SparkSession, sf_dir: str) -> DataFrame
                  CAST(SUM(CAST(round(value * 100) AS BIGINT)) OVER w AS BIGINT)
                    AS trail_cents,
                  CAST(COUNT(*) OVER w AS BIGINT) AS trail_n
-          FROM _ev_trail
+          FROM {events}
           WINDOW w AS (PARTITION BY event_type ORDER BY ts
                        RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
         ) t
         WHERE event_id % 20 = 0
         ORDER BY event_id
-        """
+        """,
+        events=t["events"],
     )
 
 
@@ -609,7 +610,7 @@ def q_events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM. At 100 TB swap the exact percentile for percentile_approx and
     the join shape is unchanged (the approx variant's error bound is
     gated in tests/test_approx.py)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     bounds = (
         t["events"]
         .groupBy("event_type")
@@ -733,7 +734,7 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     This batch plan is what operators/funnel.funnel dispatches every
     BOUNDED input to (0.74x wall at 64x events, vs ≈9x for the
     GroupState twin)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return batch_funnel(t["events"]).orderBy("user_id")
 
 
@@ -770,7 +771,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     event stream to |users|·|weeks| rows before the join, and every
     shuffle key is uniform. count(*) after the distinct equals
     COUNT(DISTINCT user) per cell with no second distinct pass."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     e = t["events"].select("user_id", "ts")
     first_week = e.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
@@ -835,7 +836,7 @@ def q_session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform-key aggregate with a top-k TakeOrdered."""
     from ..operators import sessions
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     numbered = sessions.assign_sessions(
         t["events"].select("user_id", "event_id", "ts", "event_type")
     )
@@ -940,7 +941,7 @@ def q_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the oracle replays it value-for-value."""
     from ..operators.profiling import mad_outlier_stats
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return mad_outlier_stats(t["events"])
 
 
@@ -966,7 +967,7 @@ def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered per-key scan (applyInPandas or transformWithState); the
     truncated form is the shuffle-friendly default with error bounded
     by (1-alpha)^8 ≈ 0.1 of weight mass."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["events"]
         .select("event_id", "user_id", F.expr(_ewma_expr()).alias("ewma_value"))
@@ -1022,7 +1023,7 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Logic: operators/funnel.last_touch_attribution."""
     from ..operators.funnel import last_touch_attribution
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return last_touch_attribution(t["events"])
 
 
@@ -1139,7 +1140,7 @@ def q_scd2_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-pass history build (no self-join, no sort but the window's).
     The SCD1 compaction (latest_event_snapshot) is this table filtered
     to is_current."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     nxt = F.lead("ts").over(w)
     return (
@@ -1183,7 +1184,7 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combining aggregation (≤ types × 12 groups), no
     data-dependent pre-pass. The profile shape every DQ/drift monitor
     computes."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["events"]
         .groupBy(
@@ -1261,7 +1262,7 @@ def q_event_type_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-to-right order — bit-identical on any engine, any width."""
     from ..operators.sampling import tiny_global_window
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     d = (
         t["events"]
         .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
@@ -1333,7 +1334,7 @@ def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase, and never a future state (the leakage direction)."""
     from ..operators.sessions import bucketed_range_join
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     ev_t = t["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dim = (
@@ -1434,7 +1435,7 @@ def q_conversion_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel window is approx_percentile."""
     from ..operators import profiling
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return profiling.conversion_latency_stats(t["events"], approx=False)
 
 
@@ -1494,7 +1495,7 @@ def q_session_bounce_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry type."""
     from ..operators import sessions
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     numbered = sessions.assign_sessions(
         t["events"].select("user_id", "event_id", "ts", "event_type")
     )
@@ -1573,7 +1574,7 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one double division of exact integer counts, so the matrix is
     width-invariant and oracle-exact. At 100 TB nothing after the lag
     window sees data volume."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = t["events"].select(
         F.col("event_type").alias("next_type"),
@@ -1642,7 +1643,7 @@ def q_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division of two exact BIGINTs (headroom: 10⁴ cents × 10¹²
     µs spans ≈ 10¹⁶ ≪ 2⁶³; DECIMAL(38) documented past that). One
     shuffle on user_id end to end."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     seq = t["events"].select(
@@ -1721,7 +1722,7 @@ def q_event_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's session operator exists; the lag construction remains the
     portable oracle. Cross-engine equivalence of the two constructions
     is exactly what this query's driver row proves."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["events"]
         .groupBy("user_id", F.session_window("ts", "30 minutes"))
@@ -1770,7 +1771,7 @@ def q_hourly_volume_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays bit-exact. At 100 TB the hourly frame is |types|·|hours|
     rows — metadata-sized — so everything after the first count is
     free."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     hourly = (
         t["events"]
         .groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("hr"))
@@ -1836,7 +1837,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id collapse the stream to |cohorts|·|weeks| rows; the
     cumulative window and the per-user division run over that
     metadata-sized frame with exact integer cents."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     e = t["events"].select("user_id", "ts", "event_type", "value")
     first_week = e.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
@@ -1937,7 +1938,7 @@ def q_ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned-order expression over exact integers."""
     from ..operators.sampling import _hash60
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     users = (
         t["events"]
         .groupBy("user_id")
@@ -2006,7 +2007,7 @@ def q_activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0=Monday) + 1 equals DuckDB's ``isodow`` exactly, avoiding the
     engines' conflicting ``dayofweek`` conventions (Spark 1=Sunday,
     DuckDB 0=Sunday)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["events"]
         .groupBy(
@@ -2050,7 +2051,7 @@ def q_revenue_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows). First month's growth is NULL on both engines."""
     from ..operators.sampling import tiny_global_window
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     monthly = (
         t["orders"]
         .groupBy(F.date_trunc("month", F.col("o_orderdate")).alias("month"))
@@ -2116,7 +2117,7 @@ def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch accuracy path)."""
     from ..operators import profiling
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return profiling.rolling_wau(t["events"], approx=False)
 
 
@@ -2161,7 +2162,7 @@ def q_user_churn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     two user-keyed passes joined on user_id; the rate is one double
     division of exact counts. At 100 TB everything after the user
     collapse is |channels| rows."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     e = t["events"].select("user_id", "ts", "event_id", "event_type")
     us = F.unix_micros(F.col("ts"))
     horizon = e.agg(F.max(us)).collect()[0][0]  # bounded scalar probe

@@ -16,9 +16,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import staging
+from .. import catalog, staging
 from ..operators import clusters, dedup, sampling, text
-from ..registry import register, tables_for
+from ..registry import register
 from ..streaming import events as ev
 from ..stage import stage_frame
 
@@ -52,7 +52,7 @@ _DUCK_TOKENS = "string_split(trim(text), ' ')"
     survey_ref="extended: deterministic hash split (train/val/test)",
 )
 def q_hash_split_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return sampling.hash_split(t["documents"]).orderBy("doc_id")
 
 
@@ -83,7 +83,7 @@ def q_hash_split_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: sequence packing manifest (context-window chunking)",
 )
 def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return sampling.pack_sequences(t["documents"], context_tokens=2048).orderBy("doc_id")
 
 
@@ -126,7 +126,7 @@ _AUG_DUCK = _AUG_TMPL.format(str_t="VARCHAR")
     survey_ref="extended: PII scrubbing (email/phone mask + audit counts)",
 )
 def q_pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     aug = t["documents"].select("doc_id", F.expr(_AUG_SPARK).alias("text"))
     n_email, n_phone = text.pii_counts("text")
     return aug.select(
@@ -157,7 +157,7 @@ def q_pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: unigram log-prob quality scoring (perplexity proxy)",
 )
 def q_doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return text.unigram_logprob_scores(t["documents"]).orderBy("doc_id")
 
 
@@ -234,7 +234,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster's min doc_id (singletons label themselves). The engine runs
     iterative min-label propagation (operators/clusters.py); the oracle
     replays the unique fixpoint with a recursive CTE."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     edges = dedup.jaccard_candidate_pairs(
         t["documents"], shingle_n=3, min_shared=2, max_df=100
     ).filter(F.col("jaccard") >= 0.5)
@@ -254,7 +254,7 @@ def q_dup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation needs rounds = diameter. The pytest chain
     gate (test_extended_ops) proves the bound on a path graph deeper
     than min-label's iteration cap."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     edges = dedup.jaccard_candidate_pairs(
         t["documents"], shingle_n=3, min_shared=2, max_df=100
     ).filter(F.col("jaccard") >= 0.5)
@@ -299,7 +299,7 @@ def q_dup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     over cluster_id: a rank window would funnel an all-dup corpus
     through one task.
     """
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     edges = dedup.jaccard_candidate_pairs(
         t["documents"], shingle_n=3, min_shared=2, max_df=100
     ).filter(F.col("jaccard") >= 0.5)
@@ -348,7 +348,7 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import atexit
     import shutil
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     # pid-scoped: two processes running this query concurrently (e.g.
     # the parity suite alongside a driver emulation) must not overwrite
     # each other's replay source mid-stream. Pid-scoping leaks the dir
@@ -460,7 +460,7 @@ def q_dedup_stream_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def q_doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return text.repetition_scores(t["documents"]).orderBy("doc_id")
 
 
@@ -489,7 +489,7 @@ def q_doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="extended: stratified cap-sampling (corpus rebalancing)",
 )
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return sampling.stratified_cap_sample(t["documents"], cap=200).orderBy("doc_id")
 
 
@@ -559,7 +559,7 @@ def q_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus broadcast bucket offsets, so the ~80% train split packs across
     many tasks instead of one (the round-2 scale flaw, fixed; output is
     provably identical, so the oracle is unchanged)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     docs = t["documents"]
     base = docs.select("doc_id", text.token_count("text").alias("n_tokens"))
     rep = text.repetition_scores(docs).filter("keep").select("doc_id")
@@ -618,7 +618,7 @@ def q_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def q_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return sampling.per_key_cap(t["documents"], key_col="source", cap=10).orderBy(
         "doc_id"
     )
@@ -660,7 +660,7 @@ def q_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def q_temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return sampling.temperature_mixture_sample(
         t["documents"], stratum_col="source", target=250
     ).orderBy("doc_id")
@@ -686,7 +686,7 @@ def q_temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def q_training_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     keyed = t["documents"].select(
         "doc_id",
         F.md5(F.concat(F.lit("shuffle:"), F.col("doc_id").cast("string"))).alias(
@@ -744,7 +744,7 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.text import token_count
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     # r16: stage both rank inputs. Unstaged, the first rank pass re-ran
     # the tokenize scan three times (range-boundary sampling + the
     # local-rank and offset-join reads), and the second rank pass
@@ -811,7 +811,7 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def q_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return text.dup_span_stats(t["documents"], n=8).orderBy("doc_id")
 
 
@@ -854,7 +854,7 @@ def q_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Importance-resampling scores for quality-targeted data selection
     (operators/sampling.importance_weights): two bounded 64-bucket
     feature models + one literal-lookup scoring pass, zero joins."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return sampling.importance_weights(
         t["documents"], is_target=F.col("lang") == "en", n_buckets=64
     ).orderBy("doc_id")
@@ -894,7 +894,7 @@ def q_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("bench",),
 )
 def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return text.bigram_logprob_scores(t["documents"]).orderBy("doc_id")
 
 
@@ -932,7 +932,7 @@ def q_weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact k. u is the md5-derived uniform (pure function of doc_id →
     replayable anywhere); comparing ln(u)/w keeps the same order with
     better float behavior than the tiny u^(1/w) powers."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast(
             "long"
@@ -984,7 +984,7 @@ def q_weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     each source — ONE source-keyed window whose rank<=k predicate
     Catalyst pushes map-side (InferWindowGroupLimit, the same
     skew-safe two-phase top-k proven for per_source_cap)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     from pyspark.sql import Window
 
     u = (
@@ -1062,7 +1062,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     no all-pairs join exists."""
     from ..operators import similarity
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return similarity.hard_negatives(t["embeddings"], n_cells=16, k=1).orderBy(
         "src", "neg_rank"
     )
@@ -1105,7 +1105,7 @@ def q_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     highest-quality prefix. Scale shape: the only shuffle is the
     source-keyed window — at 100 TB sources are range-partitioned and
     each partition's pack is independent."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     w = (
         Window.partitionBy("source")
         .orderBy(F.desc("ttr"), F.asc("doc_id"))
@@ -1161,7 +1161,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is |sources|² rows — tiny; no cross join of sources exists.
     At 100 TB add a max_df cap on hot shingles exactly as the LSH
     posting lists do."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     sh = (
         t["documents"]
         .select("source", F.explode(text.shingles("text", 3)).alias("shingle"))
@@ -1233,7 +1233,7 @@ def q_source_minhash_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     production screen, the exact matrix the audit. Pair generation is
     the bounded collect_list + pair-explode idiom (|sources| rows, one
     struct array — never a cartesian join)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     num_hashes = 24
     p = dedup.MINHASH_PRIME
     sh = (
@@ -1332,7 +1332,7 @@ def q_near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     left join, both shuffling |documents| rows at most. The ROUNDED Jaccard
     (4 decimals, the operator's output contract) gates the threshold
     on BOTH engines so the 0.3 boundary can't drift."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     pairs = dedup.jaccard_candidate_pairs(
         t["documents"], shingle_n=3, min_shared=2, max_df=100
     )
@@ -1417,7 +1417,7 @@ def q_source_shingle_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction."""
     from ..operators import sketches
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     sh = t["documents"].select(
         "source", F.explode(text.shingles("text", 3)).alias("shingle")
     )
@@ -1506,7 +1506,7 @@ def q_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode — the daily-ingestion shape whose pair space is
     |new|·|block|, not |corpus|². One row per new doc with its dup
     verdict, match count, and best corpus match."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return dedup.incremental_near_dups(
         t["documents"], new_pct=20, shingle_n=3, min_shared=2, max_df=100,
         min_jaccard=0.3,
@@ -1535,7 +1535,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     split atomically — a paraphrased test doc can never leak into
     train. Composition of the proven pieces: jaccard_candidate_pairs →
     connected_components → hash_bucket(cluster_id)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     edges = dedup.jaccard_candidate_pairs(
         t["documents"], shingle_n=3, min_shared=2, max_df=100
     ).filter(F.col("jaccard") >= 0.5)
@@ -1677,7 +1677,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (localCheckpoint locally, parquet at cluster scale) because three
     branches (pair gen, CC nodes, final join) read it.
     """
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     c = F.col("text")
     n_tok = text.token_count(c)
     sr = text.stopword_count(c) / n_tok

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql import types as T
 
-from ..registry import register, tables_for
+from .. import catalog
+from ..registry import register
 
 # Type objects, not DDL strings: executors re-import this module when
 # deserializing the UDFs, and parsing a DDL string needs an active
@@ -75,7 +76,7 @@ def q_doc_median_length_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UDAF path shuffles once on the group key and streams Arrow
     batches per group — state is one Series per (group, batch), never
     the whole table. Cardinality of ``lang`` bounds the reduce side."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["documents"]
         .groupBy("lang")
@@ -115,7 +116,7 @@ def q_doc_norm_length_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     small enough to hold (per-group size is the scale contract of every
     applyInPandas — for unbounded groups use window functions instead,
     as the oracle's formulation shows)."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     return (
         t["documents"]
         .select("doc_id", "lang", "n_chars")
@@ -166,13 +167,13 @@ def q_doc_tokens_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows inside the task, no shuffle until the final presentation sort.
     The doc_id sample keeps driver-compare volumes bounded; the UDTF
     itself streams, so the full-corpus variant is the same plan."""
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     spark.udtf.register("tokenize_pos", _Tokenize)
-    t["documents"].filter("doc_id % 20 = 0").createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         """
         SELECT d.doc_id, t.pos, t.token
-        FROM _udtf_docs d, LATERAL tokenize_pos(d.text) t
+        FROM {docs} d, LATERAL tokenize_pos(d.text) t
         ORDER BY d.doc_id, t.pos
-        """
+        """,
+        docs=t["documents"].filter("doc_id % 20 = 0"),
     )

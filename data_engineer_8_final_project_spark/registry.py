@@ -21,8 +21,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import catalog
-
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -311,8 +309,3 @@ def all_queries() -> dict[str, Query]:
     rank = {name: i for i, name in enumerate(DRIVER_PRIORITY)}
     ordered = sorted(_REGISTRY, key=lambda n: (rank.get(n, len(rank)),))
     return {name: _REGISTRY[name] for name in ordered}
-
-
-def tables_for(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load + view-register the fixture tables for one query run."""
-    return catalog.load(spark, sf_dir)

@@ -12,7 +12,8 @@ at every site — this helper makes it code.
 
 Sink selection (runtime confs, settable per session/submit):
 
-- ``spark.graft.stage.sink`` = ``localCheckpoint`` (default) | ``parquet``
+- ``spark.graft.stage.sink`` = ``localCheckpoint`` (default) | ``parquet``;
+  any other value raises ``ValueError``
 - ``spark.graft.stage.dir``  = parquet-sink base dir (default $TMPDIR)
 
 Not a cross-run cache: every call materializes the frame it is given,
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame
 
 SINK_CONF = "spark.graft.stage.sink"
 DIR_CONF = "spark.graft.stage.dir"
+SINKS = ("localCheckpoint", "parquet")
 
 _seq = itertools.count()
 _created: list[str] = []
@@ -55,7 +57,9 @@ def stage_frame(df: DataFrame) -> DataFrame:
     materialize+re-read overhead must be under the recompute cost).
     """
     spark = df.sparkSession
-    sink = spark.conf.get(SINK_CONF, "localCheckpoint")
+    sink = spark.conf.get(SINK_CONF, SINKS[0])
+    if sink not in SINKS:
+        raise ValueError(f"{SINK_CONF}={sink!r} is not one of {', '.join(SINKS)}")
     if sink == "parquet":
         base = spark.conf.get(DIR_CONF, None) or tempfile.gettempdir()
         path = os.path.join(base, f"spark_graft_stage_{os.getpid()}_{next(_seq)}")

@@ -12,12 +12,12 @@ against the exact answer on the same data.
 import pytest
 from pyspark.sql import functions as F
 
-from data_engineer_8_final_project_spark.registry import tables_for
+from data_engineer_8_final_project_spark import catalog
 
 
 @pytest.fixture(scope="module")
 def lineitem(spark, sf_dir):
-    return tables_for(spark, sf_dir)["lineitem"]
+    return catalog.tables(spark, sf_dir)["lineitem"]
 
 
 def test_approx_count_distinct_within_rsd(lineitem):
@@ -86,9 +86,8 @@ def test_knn_graph_matches_brute_force_within_cells(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from data_engineer_8_final_project_spark.operators import similarity
-    from data_engineer_8_final_project_spark.registry import tables_for
 
-    emb = tables_for(spark, sf_dir)["embeddings"]
+    emb = catalog.tables(spark, sf_dir)["embeddings"]
     g = similarity.knn_graph(emb, n_cells=16, k=3)
     rows = g.collect()
     by_src = {}
@@ -117,9 +116,8 @@ def test_importance_weights_orders_target_slice_first(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from data_engineer_8_final_project_spark.operators import sampling
-    from data_engineer_8_final_project_spark.registry import tables_for
 
-    docs = tables_for(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     w = sampling.importance_weights(docs, is_target=F.col("lang") == "en")
     assert w.count() == docs.count()
     joined = w.join(docs.select("doc_id", "lang"), "doc_id")

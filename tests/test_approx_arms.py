@@ -17,17 +17,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_engineer_8_final_project_spark.operators import profiling
-from data_engineer_8_final_project_spark.registry import tables_for
+from data_engineer_8_final_project_spark import catalog
 
 
 @pytest.fixture(scope="module")
 def events(spark, sf_dir):
-    return tables_for(spark, sf_dir)["events"]
+    return catalog.tables(spark, sf_dir)["events"]
 
 
 @pytest.fixture(scope="module")
 def orders(spark, sf_dir):
-    return tables_for(spark, sf_dir)["orders"]
+    return catalog.tables(spark, sf_dir)["orders"]
 
 
 def test_profile_approx_distinct_within_rsd(orders):

@@ -84,9 +84,9 @@ def test_minhash_lsh_recall_vs_exact_jaccard(spark, sf_dir):
     LSH bucketing are the only possible loss sources. Recall must stay
     >= 0.9; a silent break in the ML pipeline wiring drops it to ~0.
     """
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    docs = tables_for(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     truth = {
         (r.doc_a, r.doc_b)
         for r in dedup.jaccard_candidate_pairs(
@@ -111,9 +111,9 @@ def test_minhash_native_recall_vs_exact_jaccard(spark, sf_dir):
     probability (1-s²)¹² ≈ 0.32 at s=0.3 but ~0 for the planted
     near-dup mass well above the cutoff; the fixture-measured recall
     is deterministic, so the bound is stable."""
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    docs = tables_for(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     truth = {
         (r.doc_a, r.doc_b)
         for r in dedup.jaccard_candidate_pairs(
@@ -139,9 +139,9 @@ def test_semantic_dedup_drops_within_cell_near_dups(spark, sf_dir):
     cell assignment and the boundary decisions is the DuckDB oracle's
     job (tests/test_parity.py); this pins the operator's contract."""
     from data_engineer_8_final_project_spark.operators import similarity
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    emb = tables_for(spark, sf_dir)["embeddings"]
+    emb = catalog.tables(spark, sf_dir)["embeddings"]
     verdicts = similarity.semantic_dedup_verdicts(emb, n_cells=16, threshold=0.45)
     rows = verdicts.collect()
     assert len(rows) == emb.count(), "one verdict per vector"
@@ -167,9 +167,9 @@ def test_containment_directional_contract(spark, sf_dir):
     the fixture must contain at least one pair whose two directions
     land on opposite sides of the threshold."""
     from data_engineer_8_final_project_spark.operators import dedup
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    docs = tables_for(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     rows = dedup.containment_pairs(docs, threshold=0.0).collect()
     assert rows, "fixture must produce co-shingle pairs"
     by_pair = {(r.doc_id, r.container_id): r for r in rows}
@@ -192,9 +192,9 @@ def test_mmr_trades_relevance_for_diversity(spark, sf_dir):
     (greedy argmax over a shrinking candidate set whose per-candidate
     penalty only grows as picks accumulate)."""
     from data_engineer_8_final_project_spark.operators import similarity
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    emb = tables_for(spark, sf_dir)["embeddings"]
+    emb = catalog.tables(spark, sf_dir)["embeddings"]
     got = similarity.mmr_topk(emb, query_vec_id=0, k=5).orderBy("mmr_rank").collect()
     assert [r.mmr_rank for r in got] == [1, 2, 3, 4, 5]
     assert len({r.vec_id for r in got}) == 5

@@ -498,12 +498,12 @@ def test_kmv_estimates_and_merge_exactness(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from data_engineer_8_final_project_spark.operators import sketches, text
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
     reg = all_queries()
     got = reg["source_shingle_kmv"].fn(spark, sf_dir).toPandas().set_index("source")
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     sh = t["documents"].select(
         "source", F.explode(text.shingles("text", 3)).alias("shingle")
     )
@@ -540,9 +540,9 @@ def test_leakage_safe_split_no_straddling_pairs(spark, sf_dir):
     asg = reg["leakage_safe_split"].fn(spark, sf_dir).toPandas()
     split_of = dict(zip(asg["doc_id"], asg["split"]))
 
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     pairs = (
         dedup.jaccard_candidate_pairs(t["documents"], 3, 2, 100)
         .filter("jaccard >= 0.5")
@@ -563,14 +563,14 @@ def test_incremental_dedup_matches_batch_restriction(spark, sf_dir):
     same rounded jaccard — i.e. incrementality changes WHAT is
     compared, never the similarity math."""
     from data_engineer_8_final_project_spark.operators import dedup
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
     reg = all_queries()
     inc = reg["incremental_ingest_dedup"].fn(spark, sf_dir).toPandas()
     dups = inc[inc["verdict"] == "dup"]
     assert len(dups) > 0, "fixture produced no incremental dups; test is vacuous"
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     batch = (
         dedup.jaccard_candidate_pairs(t["documents"], 3, 2, 100)
         .filter("jaccard >= 0.3")
@@ -597,14 +597,14 @@ def test_scd2_point_in_time_join_is_unique_and_leakage_free(spark, sf_dir):
     purchase (the future-leakage direction), and is exactly the
     LATEST view at-or-before the purchase ts (agrees with the as-of
     backward join semantics)."""
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
     reg = all_queries()
     got = reg["scd2_point_in_time_join"].fn(spark, sf_dir).toPandas()
     assert got["event_id"].is_unique
     assert (got["state_since"] <= got["purchase_ts"]).all()
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     ev_pd = t["events"].select("event_id", "user_id", "ts", "event_type").toPandas()
     views = ev_pd[ev_pd["event_type"] == "view"]
     for r in got.head(50).itertuples(index=False):
@@ -622,9 +622,9 @@ def test_gemm_topk_agrees_with_codegen_twin(spark, sf_dir):
     import pandas as pd
 
     from data_engineer_8_final_project_spark.operators import similarity
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    t = tables_for(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     exact = (
         similarity.brute_force_topk(t["embeddings"], query_vec_id=0, k=10)
         .toPandas()
@@ -963,10 +963,10 @@ def test_conversion_latency_hand_cases(spark, monkeypatch, tmp_path):
     purchased before any view, or never purchased, are excluded."""
     import datetime as dt
 
+    from data_engineer_8_final_project_spark import catalog
     from data_engineer_8_final_project_spark.queries.streaming_q import (
         q_conversion_latency_stats,
     )
-    from data_engineer_8_final_project_spark import registry
 
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
     rows = [
@@ -981,12 +981,7 @@ def test_conversion_latency_hand_cases(spark, monkeypatch, tmp_path):
         "user_id long, ts timestamp, event_id long, event_type string, "
         "value double, props string",
     )
-    monkeypatch.setattr(
-        registry, "tables_for", lambda spark_, sf_dir_: {"events": df}
-    )
-    import data_engineer_8_final_project_spark.queries.streaming_q as sq
-
-    monkeypatch.setattr(sq, "tables_for", lambda spark_, sf_dir_: {"events": df})
+    monkeypatch.setattr(catalog, "tables", lambda spark_, sf_dir_: {"events": df})
     out = q_conversion_latency_stats(spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0]
@@ -1072,7 +1067,7 @@ def test_session_bounce_hand_sessions(spark, monkeypatch, tmp_path):
     rollup must report each exactly."""
     import datetime as dt
 
-    import data_engineer_8_final_project_spark.queries.streaming_q as sq
+    from data_engineer_8_final_project_spark import catalog
     from data_engineer_8_final_project_spark.queries.streaming_q import (
         q_session_bounce_stats,
     )
@@ -1089,7 +1084,7 @@ def test_session_bounce_hand_sessions(spark, monkeypatch, tmp_path):
         "user_id long, ts timestamp, event_id long, event_type string, "
         "value double, props string",
     )
-    monkeypatch.setattr(sq, "tables_for", lambda s_, d_: {"events": df})
+    monkeypatch.setattr(catalog, "tables", lambda s_, d_: {"events": df})
     out = {r.entry_type: r for r in q_session_bounce_stats(spark, str(tmp_path)).collect()}
     v = out["view"]
     assert (v.n_sessions, v.n_bounces, v.bounce_rate) == (2, 1, 0.5)
@@ -1146,7 +1141,7 @@ def test_time_weighted_value_hand_segments(spark, monkeypatch, tmp_path):
     single-event user has no span and is excluded."""
     import datetime as dt
 
-    import data_engineer_8_final_project_spark.queries.streaming_q as sq
+    from data_engineer_8_final_project_spark import catalog
     from data_engineer_8_final_project_spark.queries.streaming_q import (
         q_time_weighted_value,
     )
@@ -1163,7 +1158,7 @@ def test_time_weighted_value_hand_segments(spark, monkeypatch, tmp_path):
         "user_id long, ts timestamp, event_id long, event_type string, "
         "value double, props string",
     )
-    monkeypatch.setattr(sq, "tables_for", lambda s_, d_: {"events": df})
+    monkeypatch.setattr(catalog, "tables", lambda s_, d_: {"events": df})
     out = {r.user_id: r for r in q_time_weighted_value(spark, str(tmp_path)).collect()}
     assert set(out) == {1}
     r = out[1]
@@ -1202,7 +1197,7 @@ def test_native_session_window_matches_lag_construction(spark, sf_dir):
     from data_engineer_8_final_project_spark import catalog
 
     lag_based = (
-        sessionize(catalog.load(spark, sf_dir)["events"], gap_minutes=30)
+        sessionize(catalog.tables(spark, sf_dir)["events"], gap_minutes=30)
         .select("user_id", "session_start", "n_events")
         .toPandas()
     )
@@ -1400,7 +1395,7 @@ def test_cohort_ltv_cumulative_and_consistent_with_totals(spark, sf_dir):
     by_cohort: dict = {}
     for r in rows:
         by_cohort.setdefault(r.cohort_week, []).append(r)
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     for cohort, rs in by_cohort.items():
         ltvs = [r.cum_ltv_per_user for r in rs]
         assert ltvs == sorted(ltvs), cohort
@@ -1441,7 +1436,7 @@ def test_ab_test_matches_scipy_free_reference(spark, sf_dir):
     from data_engineer_8_final_project_spark import catalog
 
     r = all_queries()["ab_test_conversion"].fn(spark, sf_dir).collect()[0]
-    ev = catalog.load(spark, sf_dir)["events"].select(
+    ev = catalog.tables(spark, sf_dir)["events"].select(
         "user_id", "event_type", "value"
     ).toPandas()
     conv = (
@@ -1468,7 +1463,7 @@ def test_activity_heatmap_covers_all_events(spark, sf_dir):
     from data_engineer_8_final_project_spark import catalog
 
     out = all_queries()["activity_heatmap"].fn(spark, sf_dir).collect()
-    assert sum(r.n_events for r in out) == catalog.load(spark, sf_dir)["events"].count()
+    assert sum(r.n_events for r in out) == catalog.tables(spark, sf_dir)["events"].count()
     for r in out:
         assert 1 <= r.dow <= 7 and 0 <= r.hod <= 23
 
@@ -1524,7 +1519,7 @@ def test_rolling_wau_exact_vs_pandas_window(spark, sf_dir):
 
     out = {r.day.date(): r for r in all_queries()["rolling_wau"].fn(spark, sf_dir).collect()}
     ud = (
-        catalog.load(spark, sf_dir)["events"]
+        catalog.tables(spark, sf_dir)["events"]
         .selectExpr("user_id", "CAST(date_trunc('day', ts) AS DATE) AS d")
         .distinct()
         .toPandas()
@@ -1559,7 +1554,7 @@ def test_user_churn_rate_hand_cases(spark, monkeypatch, tmp_path):
     first-touched via 'view' → churn_rate 0.5."""
     import datetime as dt
 
-    import data_engineer_8_final_project_spark.queries.streaming_q as sq
+    from data_engineer_8_final_project_spark import catalog
     from data_engineer_8_final_project_spark.queries.streaming_q import (
         q_user_churn_rate,
     )
@@ -1576,7 +1571,7 @@ def test_user_churn_rate_hand_cases(spark, monkeypatch, tmp_path):
         "user_id long, ts timestamp, event_id long, event_type string, "
         "value double, props string",
     )
-    monkeypatch.setattr(sq, "tables_for", lambda s_, d_: {"events": df})
+    monkeypatch.setattr(catalog, "tables", lambda s_, d_: {"events": df})
     out = {r.first_channel: r for r in q_user_churn_rate(spark, str(tmp_path)).collect()}
     v = out["view"]
     assert (v.n_users, v.n_churned, v.churn_rate) == (2, 1, 0.5)
@@ -1676,10 +1671,12 @@ def test_embedding_covariance_matches_numpy(spark, sf_dir):
     nonnegative, n = corpus size on every row, 2080 = 64·65/2 rows)."""
     import numpy as np
 
-    from data_engineer_8_final_project_spark.registry import all_queries, tables_for
+    from data_engineer_8_final_project_spark import catalog
+
+    from data_engineer_8_final_project_spark.registry import all_queries
 
     out = all_queries()["embedding_covariance"].fn(spark, sf_dir).toPandas()
-    emb = tables_for(spark, sf_dir)["embeddings"].select("embedding").toPandas()
+    emb = catalog.tables(spark, sf_dir)["embeddings"].select("embedding").toPandas()
     s = np.round(np.stack(emb.embedding.to_numpy()) * 1e6).astype(np.int64)
     n = s.shape[0]
     assert len(out) == 64 * 65 // 2
@@ -1699,9 +1696,9 @@ def test_cms_never_undercounts(spark, sf_dir):
     count on each of the 4 rows."""
     from pyspark.sql import functions as F
 
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    docs = tables_for(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     tok = docs.select(F.explode(F.split(F.trim(F.col("text")), " ")).alias("token"))
     truth = tok.groupBy("token").count()
 
@@ -1741,10 +1738,12 @@ def test_pca_scores_match_numpy_eigendirection(spark, sf_dir):
     score/score_int are internally consistent."""
     import math
 
-    from data_engineer_8_final_project_spark.registry import all_queries, tables_for
+    from data_engineer_8_final_project_spark import catalog
+
+    from data_engineer_8_final_project_spark.registry import all_queries
 
     out = all_queries()["embedding_pca_scores"].fn(spark, sf_dir).toPandas()
-    emb = tables_for(spark, sf_dir)["embeddings"].select("vec_id", "embedding").toPandas()
+    emb = catalog.tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding").toPandas()
     order = np.argsort(emb.vec_id.to_numpy())
     s = np.round(np.stack(emb.embedding.to_numpy()) * 1e6).astype(np.int64)[order]
     c = np.cov(s.astype(np.float64), rowvar=False, bias=True)
@@ -1776,12 +1775,14 @@ def test_bootstrap_ci_brackets_mean(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from data_engineer_8_final_project_spark.registry import all_queries, tables_for
+    from data_engineer_8_final_project_spark import catalog
+
+    from data_engineer_8_final_project_spark.registry import all_queries
 
     row = all_queries()["revenue_bootstrap_ci"].fn(spark, sf_dir).collect()[0]
     assert row.ci_lo <= row.mean_value <= row.ci_hi
     stats = (
-        tables_for(spark, sf_dir)["orders"]
+        catalog.tables(spark, sf_dir)["orders"]
         .agg(
             F.stddev_pop("o_totalprice").alias("sd"),
             F.count(F.lit(1)).alias("n"),
@@ -1800,9 +1801,9 @@ def test_ann_recall_eval_laws(spark, sf_dir):
     is itself a centroid always has its own cell probed first (recall
     at tiny n_probe still > 0)."""
     from data_engineer_8_final_project_spark.operators import similarity
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    emb = tables_for(spark, sf_dir)["embeddings"]
+    emb = catalog.tables(spark, sf_dir)["embeddings"]
     qids = (0, 87, 203)
 
     def recalls(n_probe):
@@ -1828,9 +1829,9 @@ def test_pq_recall_eval_laws(spark, sf_dir):
     ADC shortlist can only DROP truth survivors from the probed set),
     and IVF-PQ recall is monotone in n_probe."""
     from data_engineer_8_final_project_spark.operators import similarity
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
 
-    emb = tables_for(spark, sf_dir)["embeddings"]
+    emb = catalog.tables(spark, sf_dir)["embeddings"]
     n = emb.count()
     qids = (0, 87, 203)
 

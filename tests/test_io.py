@@ -108,12 +108,12 @@ def test_jdbc_roundtrip_derby_embedded(spark, sf_dir, tmp_path):
     warehouse), and mode('overwrite') exercises the reference's
     drop-and-replace refresh semantics (dags/projectde_dag.py:134-155).
     """
-    from data_engineer_8_final_project_spark.registry import tables_for
+    from data_engineer_8_final_project_spark import catalog
     from data_engineer_8_final_project_spark.sources import io as eio
 
     url = f"jdbc:derby:{tmp_path}/derby_db;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    nation = tables_for(spark, sf_dir)["nation"]
+    nation = catalog.tables(spark, sf_dir)["nation"]
     eio.write_jdbc(nation, url, "nation_sink", properties=props)
     back = eio.read_jdbc(spark, url, "nation_sink", properties=props)
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in nation.collect()}

@@ -56,7 +56,7 @@ def test_kafka_roundtrip_matches_batch(spark, sf_dir):
     from data_engineer_8_final_project_spark import catalog
     from data_engineer_8_final_project_spark.streaming import events as ev
 
-    batch = catalog.load(spark, sf_dir)["events"]
+    batch = catalog.tables(spark, sf_dir)["events"]
     (
         batch.select(
             F.col("event_id").cast("string").alias("key"),

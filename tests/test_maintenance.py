@@ -13,7 +13,7 @@ from data_engineer_8_final_project_spark.streaming import incremental
 
 def test_compact_collapses_small_files(spark, sf_dir, tmp_path):
     src, dst = str(tmp_path / "small"), str(tmp_path / "compacted")
-    orders = catalog.load(spark, sf_dir)["orders"]
+    orders = catalog.tables(spark, sf_dir)["orders"]
     orders.repartition(64).write.parquet(src)  # simulate a leaky sink
     assert len(glob.glob(f"{src}/*.parquet")) == 64
 
@@ -34,7 +34,7 @@ def test_compact_with_sort_clusters_ranges(spark, sf_dir, tmp_path):
     import pyarrow.parquet as pq
 
     src, dst = str(tmp_path / "s2"), str(tmp_path / "c2")
-    orders = catalog.load(spark, sf_dir)["orders"]
+    orders = catalog.tables(spark, sf_dir)["orders"]
     orders.repartition(16).write.parquet(src)
     maintenance.compact(
         spark, src, dst, target_bytes=16 * 1024, sort_by=["o_orderkey"]
@@ -57,7 +57,7 @@ def test_incremental_view_refreshes_only_new_data_and_matches_batch(
     """Two refreshes (second after more files arrive, including rows
     'late' for windows already materialized) must converge to exactly
     the batch rollup — the MV never under- or double-counts."""
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     src = str(tmp_path / "src")
     view = str(tmp_path / "view")
     ckpt = str(tmp_path / "ckpt")

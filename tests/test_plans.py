@@ -94,7 +94,7 @@ def test_bucketed_join_runs_without_shuffle(spark, sf_dir, tmp_path):
     from data_engineer_8_final_project_spark import catalog
     from data_engineer_8_final_project_spark.sources import io as eio
 
-    t = catalog.load(spark, sf_dir)
+    t = catalog.tables(spark, sf_dir)
     suffix = uuid.uuid4().hex[:8]
     li, od = f"li_b_{suffix}", f"od_b_{suffix}"
     eio.write_bucketed(t["lineitem"], li, "l_orderkey", 8, sort_cols="l_orderkey")
@@ -225,7 +225,7 @@ def test_sequence_packing_two_level_prefix_sum_matches_global_window(spark, sf_d
     from data_engineer_8_final_project_spark.operators import sampling
     from data_engineer_8_final_project_spark.operators.text import token_count
 
-    docs = catalog.load(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     toks = docs.select("doc_id", token_count("text").alias("n_tokens"))
     w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
     want = toks.select(
@@ -261,7 +261,7 @@ def test_distributed_row_number_matches_global_window(spark, sf_dir):
     from data_engineer_8_final_project_spark import catalog
     from data_engineer_8_final_project_spark.operators import sampling
 
-    c = catalog.load(spark, sf_dir)["customer"].select("c_custkey", "c_name")
+    c = catalog.tables(spark, sf_dir)["customer"].select("c_custkey", "c_name")
     want = c.withColumn(
         "rnk", F.row_number().over(Window.orderBy("c_name", "c_custkey")).cast("long")
     )

@@ -19,7 +19,7 @@ def test_per_key_cap_matches_single_window(spark, sf_dir):
     global window for ANY input partitioning (the phase-1 partition cut
     may keep different candidate sets, but the global top-cap per key
     is invariant)."""
-    docs = catalog.load(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     want_df = (
         docs.select(
             "doc_id",
@@ -51,7 +51,7 @@ def test_per_key_cap_matches_single_window(spark, sf_dir):
 
 
 def test_per_key_cap_never_exceeds_cap(spark, sf_dir):
-    docs = catalog.load(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     out = sampling.per_key_cap(docs, key_col="lang", cap=3)
     per_key = out.groupBy("lang").count().collect()
     assert per_key and all(r["count"] <= 3 for r in per_key)
@@ -62,7 +62,7 @@ def test_temperature_rates_monotone_and_bounded(spark, sf_dir):
     UP-weighting small sources relative to proportional sampling — the
     defining property of temperature < 1 (a source's sampled share
     exceeds its corpus share iff the source is smaller than average)."""
-    docs = catalog.load(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     # skew the corpus: drop most of src0 so sources differ in size
     # (src0's doc_ids are the multiples of 20 — keep only the
     # multiples of 100, i.e. every fifth src0 doc)
@@ -83,7 +83,7 @@ def test_temperature_rates_monotone_and_bounded(spark, sf_dir):
 
 
 def test_temperature_sample_deterministic_across_partitioning(spark, sf_dir):
-    docs = catalog.load(spark, sf_dir)["documents"]
+    docs = catalog.tables(spark, sf_dir)["documents"]
     a = sorted(
         map(tuple, sampling.temperature_mixture_sample(docs).collect())
     )
@@ -101,7 +101,7 @@ def test_cluster_balanced_sample_caps_every_cluster(spark, sf_dir):
     ``cap`` rows, pick_rank is dense 1..n within each cluster, the
     surviving (vec_id → cluster) assignment agrees with the standalone
     k-means run, and membership is invariant to input partitioning."""
-    emb = catalog.load(spark, sf_dir)["embeddings"]
+    emb = catalog.tables(spark, sf_dir)["embeddings"]
     out = sampling.cluster_balanced_sample(emb, k=4, rounds=2, cap=30)
     rows = out.collect()
     assert rows

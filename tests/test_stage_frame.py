@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineer_8_final_project_spark import stage
@@ -44,3 +45,13 @@ def test_parquet_sink_roundtrips_and_uses_unique_dirs(spark, tmp_path):
     finally:
         spark.conf.unset(stage.SINK_CONF)
         spark.conf.unset(stage.DIR_CONF)
+
+
+def test_unknown_sink_raises_naming_the_allowed_values(spark):
+    df = spark.range(10)
+    spark.conf.set(stage.SINK_CONF, "localcheckpoint")  # wrong case
+    try:
+        with pytest.raises(ValueError, match="localCheckpoint, parquet"):
+            stage.stage_frame(df)
+    finally:
+        spark.conf.unset(stage.SINK_CONF)

@@ -15,6 +15,15 @@ defect found only by a scale leg:
    columns across the Arrow boundary pay measured 15-25%% penalties
    (r12: projecting cut user_totals_stateful 381.7 -> 323.8 s at 64x).
 
+Two more patterns guard the per-session fixture memo
+(``catalog.tables``), whose cache hits register nothing:
+
+4. a query that registers a temp view under a fixed name collides with
+   the same query on a concurrent client, and one that reads the
+   fixture views by name answers for whichever ``sf_dir`` was loaded
+   last — queries bind DataFrames (``spark.sql(text, name=df)``);
+5. ``registry.tables_for``, the old reload-per-query path, stays gone.
+
 These are ALLOWLIST tests, not bans: every existing site was
 adjudicated in the r13 sweep (SURVEY §13); a NEW site fails here until
 it is adjudicated (projected / bounded-keyspace / inside the helper)
@@ -26,10 +35,8 @@ from __future__ import annotations
 import os
 import re
 
-PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "data_engineer_8_final_project_spark",
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "data_engineer_8_final_project_spark")
 
 
 def _py_sources() -> dict[str, str]:
@@ -156,3 +163,32 @@ def test_arrow_boundary_sites_project_consumed_columns():
         "must project consumed columns before the exchange; adjudicate "
         "and update the allowlist."
     )
+
+
+def test_only_the_catalog_registers_temp_views():
+    """Pattern 4: the one temp-view registration in the engine is
+    ``catalog.load`` (views for interactive SQL; no query reads them).
+    A query that needs SQL over a frame passes it as a ``spark.sql``
+    keyword argument, which registers a uuid-named view and drops it
+    after analysis."""
+    allowed = {("catalog.py", "load")}
+    got = _sites(r"\.create(OrReplace)?(Global)?TempView\(")
+    assert got == allowed, (
+        f"temp-view registration set changed: {got ^ allowed}. A fixed "
+        "view name collides under concurrent clients, and the fixture "
+        "views hold only the last-loaded sf_dir: bind the frame with "
+        "spark.sql(text, name=df) instead."
+    )
+
+
+def test_nothing_uses_tables_for():
+    """Pattern 5: every caller reads fixtures through catalog.tables."""
+    hits = []
+    for sub in ("data_engineer_8_final_project_spark", "tests", "scripts", "perfbench"):
+        for dirpath, _dirs, files in os.walk(os.path.join(ROOT, sub)):
+            for f in files:
+                p = os.path.join(dirpath, f)
+                if f.endswith(".py") and p != os.path.abspath(__file__):
+                    if re.search(r"\btables_for\b", open(p).read()):
+                        hits.append(os.path.relpath(p, ROOT))
+    assert hits == [], f"{hits} name registry.tables_for: call catalog.tables"

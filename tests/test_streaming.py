@@ -10,7 +10,7 @@ from data_engineer_8_final_project_spark.streaming import events as ev
 
 def test_stream_equals_batch(spark, sf_dir):
     batch = (
-        ev.hourly_window_agg(catalog.load(spark, sf_dir)["events"])
+        ev.hourly_window_agg(catalog.tables(spark, sf_dir)["events"])
         .orderBy("window_start", "event_type")
         .collect()
     )
@@ -38,7 +38,7 @@ def test_stateful_totals_accumulate_across_microbatches(spark, sf_dir, tmp_path)
 
     from data_engineer_8_final_project_spark.streaming import stateful
 
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     src = str(tmp_path / "events_split")
     events.repartition(3).write.mode("overwrite").parquet(src)
 
@@ -69,7 +69,7 @@ def test_foreach_batch_parquet_sink_exactly_once(spark, sf_dir, tmp_path):
     """availableNow replay through the foreachBatch parquet sink equals
     the batch table; re-running against the same checkpoint writes
     nothing new (exactly-once, not at-least-once)."""
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -126,7 +126,7 @@ def test_checkpoint_resume_processes_only_new_files(spark, sf_dir, tmp_path):
     same checkpoint must pick up files that arrived AFTER the first run
     — incrementally, without reprocessing the old ones — and the union
     of epochs must equal the full batch."""
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     half_a = events.filter("event_id % 2 = 0")
     half_b = events.filter("event_id % 2 = 1")
     src = str(tmp_path / "src")
@@ -193,7 +193,7 @@ def test_transform_with_state_totals_match_batch(spark, sf_dir):
 
     got = user_totals_tws(spark, sf_dir).collect()
     want = (
-        catalog.load(spark, sf_dir)["events"]
+        catalog.tables(spark, sf_dir)["events"]
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -375,7 +375,7 @@ def test_watermark_drop_audit_accounts_planted_late_rows(spark, sf_dir):
     prog: list = []
     pdf = ev.watermark_drop_audit(spark, sf_dir, progress_out=prog).toPandas()
 
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     lo_us, hi_us, n = events.agg(
         F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts")), F.count(F.lit(1))
     ).collect()[0]
@@ -434,7 +434,7 @@ def test_wmdedup_state_bounded_vs_plain_dropduplicates(spark, sf_dir):
     prog: list = []
     pdf = ev.dedup_stream_watermarked(spark, sf_dir, progress_out=prog).toPandas()
 
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     lo_us, hi_us, n = events.agg(
         F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts")), F.count(F.lit(1))
     ).collect()[0]
@@ -501,7 +501,7 @@ def test_rocksdb_changelog_checkpointing_resume(spark, sf_dir, tmp_path):
     """
     import glob as _glob
 
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     half_a = events.filter("event_id % 2 = 0")
     half_b = events.filter("event_id % 2 = 1")
     src = str(tmp_path / "src")
@@ -571,7 +571,7 @@ def test_statestore_reader_exposes_live_aggregation_state(spark, sf_dir, tmp_pat
     count/sums, exactly matching the batch groupBy over the same data —
     so state-surgery tooling built on this reader sees true values.
     """
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     events.coalesce(1).write.parquet(src)
@@ -616,7 +616,7 @@ def test_event_streams_consume_directory_shaped_sources(spark, sf_dir, tmp_path)
 
     from data_engineer_8_final_project_spark import staging
 
-    events = catalog.load(spark, sf_dir)["events"]
+    events = catalog.tables(spark, sf_dir)["events"]
     d = tmp_path / "dirshaped"
     d.mkdir()
     # three TIME-SPLIT parts with increasing mtimes: a random split
@@ -673,7 +673,7 @@ def test_event_streams_consume_directory_shaped_sources(spark, sf_dir, tmp_path)
     got_seg = ev.segment_enriched_stream(spark, sf2)
     want_seg = (
         events.join(
-            catalog.load(spark, sf_dir)["customer"].select(
+            catalog.tables(spark, sf_dir)["customer"].select(
                 F.col("c_custkey").alias("user_id"), "c_mktsegment"
             ),
             "user_id",
