@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ..stage import stage_frame
+from ..stage import release, stage_frame
 
 
 def connected_components(
@@ -187,6 +187,7 @@ def connected_components_twostar(
             .distinct()
             .transform(stage_frame)
         )
+        release(e)
         probe = new_e.agg(
             F.count(F.lit(1)).alias("n"), F.sum(F.col("u") + F.col("v")).alias("s")
         ).collect()[0]
@@ -207,8 +208,9 @@ def connected_components_twostar(
             "doc_id",
             F.least(F.col("doc_id"), F.coalesce("mv", F.col("doc_id"))).alias("cluster_id"),
         )
-    )
-    return labels.transform(stage_frame)
+    ).transform(stage_frame)
+    release(e)
+    return labels
 
 
 def pagerank_fixed_point(
@@ -324,6 +326,7 @@ def pagerank_fixed_point(
                     .collect()[0]["d"]
                 )
                 nonrecv_delta = 0
+                release(ranks)
             delta = max(
                 [d for d in (recv_delta, nonrecv_delta) if d is not None],
                 default=None,
@@ -431,12 +434,15 @@ def label_propagation_fixed(
                 .filter(F.col("ln") != F.col("lbl"))
                 .count()
             )
+            release(labels)
             labels = new
             if changed == 0:
                 break
     else:
         for _ in range(iters):
-            labels = step(labels)
+            new = step(labels)
+            release(labels)
+            labels = new
     return labels.select("id", F.col("lbl").cast("long").alias("community"))
 
 
@@ -602,11 +608,13 @@ def bfs_hops_fixed(
             .groupBy("dst")
             .agg(F.min(F.col("d") + 1).alias("nd"))
         )
-        dist = (
+        new = (
             dist.join(nb.withColumnRenamed("dst", "id"), "id", "left")
             .select("id", F.least("d", "nd").alias("d"))
             .transform(stage_frame)
         )
+        release(dist)
+        dist = new
     return dist.select("id", F.coalesce("d", F.lit(-1)).cast("long").alias("hops"))
 
 
@@ -647,11 +655,13 @@ def kcore_fixed(
             .filter(F.col("deg") >= core_k)
             .select("src")
         )
-        und = (
+        new = (
             und.join(keep, "src", "semi")
             .join(keep.select(F.col("src").alias("dst")), "dst", "semi")
             .transform(stage_frame)
         )
+        release(und)
+        und = new
     deg_f = und.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
     return (
         vertices.join(deg_f, vertices["id"] == deg_f["src"], "left")

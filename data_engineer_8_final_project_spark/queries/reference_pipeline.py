@@ -23,7 +23,6 @@ standings ids are safe (club is unique per league).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +30,7 @@ from pyspark.sql import functions as F
 from .. import catalog
 from ..operators.cleaning import clean_matches, league_standings
 from ..registry import register
+from ..stage import replay
 from ..sources import html
 
 DAY_CODES = ["Sa", "Su", "Mo", "Tu"]
@@ -146,15 +146,17 @@ cleaned AS (
 )
 def q_html_matches_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Render → save → spark.read.text-parse round trip of the scrape
-    source. The fixture lands in a per-SF scratch dir (overwritten each
-    run — content is deterministic, only the parse output is graded)."""
+    source. The pages are staged once per fixture (content is
+    deterministic, only the parse output is graded)."""
     t = catalog.tables(spark, sf_dir)
-    raw = synth_matches_raw(t["lineitem"])
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_html_{os.path.basename(sf_dir.rstrip('/'))}",
+    path, _ = replay(
+        spark,
+        "html",
+        os.path.join(sf_dir, "lineitem.parquet"),
+        (),
+        lambda: ([html.render_matches_html(synth_matches_raw(t["lineitem"]))], None),
+        fmt="text",
     )
-    html.write_html_fixture(raw, path)
     return html.read_html_matches(spark, path).orderBy(
         "date", "home_team", "score", "away_team", "league"
     )

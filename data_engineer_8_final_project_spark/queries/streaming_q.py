@@ -14,15 +14,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import catalog, staging
+from .. import catalog
 from ..operators.funnel import batch_funnel
 from ..registry import register
+from ..stage import replay
 from ..streaming import events as ev
 from .flagship import STANDINGS_ORACLE
-
-#: Funnel stage dirs already scheduled for atexit removal (one
-#: registration per (process, stage); the dirs are pid-scoped).
-_FUNNEL_STAGES: set[str] = set()
 
 HOURLY_ORACLE = """
 SELECT date_trunc('hour', ts) AS window_start,
@@ -121,20 +118,21 @@ def q_standings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is one scan + bounded state updates — running standings over
     an unbounded match feed at any scale.
     """
-    import os
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..operators.standings import matches, pair_rollup, standings_from_pairs
     from ..schemas import LINEITEM
 
     t = catalog.tables(spark, sf_dir)
-    chunked = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_li_stream_{os.path.basename(sf_dir.rstrip('/'))}",
+    # any 4-way split: the last emission per pair is the full aggregate
+    part = F.pmod(F.hash("l_orderkey", "l_linenumber"), F.lit(4))
+    chunked, _ = replay(
+        spark,
+        "li_stream",
+        os.path.join(sf_dir, "lineitem.parquet"),
+        (),
+        lambda: ([t["lineitem"].filter(part == i) for i in range(4)], None),
     )
-    t["lineitem"].repartition(4).write.mode("overwrite").parquet(chunked)
 
     li_stream = (
         spark.readStream.schema(LINEITEM).option("maxFilesPerTrigger", 1).parquet(chunked)
@@ -1051,12 +1049,7 @@ def q_event_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     planner-level dispatch (bounded → batch min-chaining at 0.74x of
     64x; streaming frame → this stateful twin), and production callers
     go through it."""
-    import atexit
     import datetime as dt
-    import hashlib
-    import os
-    import shutil
-    import tempfile
 
     from ..catalog import _assert_events_ts_format
     from ..schemas import EVENTS
@@ -1064,40 +1057,18 @@ def q_event_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = os.path.join(sf_dir, "events.parquet")
     _assert_events_ts_format(src)
-    st_ = os.stat(src)
-    # pid-scoped (advisor finding, round 6): two processes staging
-    # concurrently — e.g. the parity suite alongside a driver emulation
-    # — must not rmtree/append under each other; the same hazard the
-    # dedup_stream stage dir already guards against.
-    key = hashlib.md5(
-        f"funnel-v3:{os.path.abspath(src)}:{st_.st_mtime_ns}:{st_.st_size}:{os.getpid()}".encode()
-    ).hexdigest()[:12]
-    # a crashed pid never runs its atexit reap and its key is never
-    # reused — sweep day-old orphans of this family on entry
-    staging.sweep_stale_stage_dirs("spark_graft_funnel_")
-    stage = os.path.join(tempfile.gettempdir(), f"spark_graft_funnel_{key}")
-    done = os.path.join(stage, "_staged_ok")
-    # pid-scoping means no other process ever reuses this dir, so it
-    # would leak one copy of events.parquet per process without an
-    # atexit reap (advisor finding, round 7). Registered once per
-    # (process, stage) — re-runs in the same process reuse the dir.
-    if stage not in _FUNNEL_STAGES:
-        _FUNNEL_STAGES.add(stage)
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    if not os.path.exists(done):
+
+    def chunks():
         batch = spark.read.schema(EVENTS).parquet(src)
         lo, hi = batch.agg(F.min("ts"), F.max("ts")).collect()[0]  # bounded: two scalars
-        shutil.rmtree(stage, ignore_errors=True)
         cuts = [lo + (hi - lo) * i // 3 for i in range(4)]
         cuts[-1] = hi + dt.timedelta(microseconds=1)
-        staged: set[str] = set()
-        for i in range(3):
-            batch.filter((F.col("ts") >= cuts[i]) & (F.col("ts") < cuts[i + 1])).coalesce(
-                1
-            ).write.mode("append").parquet(stage)
-            # strictly-increasing whole-second mtimes
-            staging.pin_new_file_mtimes(stage, st_.st_mtime + 1 + i, staged)
-        open(done, "w").close()
+        return [
+            batch.filter((F.col("ts") >= cuts[i]) & (F.col("ts") < cuts[i + 1]))
+            for i in range(3)
+        ], None
+
+    stage, _ = replay(spark, "funnel", src, (), chunks)
     events = (
         spark.readStream.schema(EVENTS).option("maxFilesPerTrigger", 1).parquet(stage)
     )

@@ -11,20 +11,15 @@ connected-components clustering, replayed in SQL with a recursive CTE.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import catalog, staging
+from .. import catalog
 from ..operators import clusters, dedup, sampling, text
 from ..registry import register
 from ..streaming import events as ev
-from ..stage import stage_frame
-
-#: docs-stream stage dirs already scheduled for atexit removal (one
-#: registration per (process, stage); the dirs are pid-scoped).
-_DOC_STREAM_STAGES: set[str] = set()
+from ..stage import replay, stage_frame
 
 _DUCK_TOKENS = "string_split(trim(text), ' ')"
 
@@ -345,24 +340,15 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..schemas import FIXTURE_SCHEMAS
 
-    import atexit
-    import shutil
-
     t = catalog.tables(spark, sf_dir)
-    # pid-scoped: two processes running this query concurrently (e.g.
-    # the parity suite alongside a driver emulation) must not overwrite
-    # each other's replay source mid-stream. Pid-scoping leaks the dir
-    # if this process dies before atexit — sweep day-old orphans of
-    # the family on entry (VERDICT r8 item 7).
-    staging.sweep_stale_stage_dirs("spark_graft_docs_stream_")
-    chunked = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_docs_stream_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
+    part = F.pmod(F.hash("doc_id"), F.lit(4))
+    chunked, _ = replay(
+        spark,
+        "docs_stream",
+        os.path.join(sf_dir, "documents.parquet"),
+        (),
+        lambda: ([t["documents"].filter(part == i) for i in range(4)], None),
     )
-    if chunked not in _DOC_STREAM_STAGES:
-        _DOC_STREAM_STAGES.add(chunked)
-        atexit.register(shutil.rmtree, chunked, ignore_errors=True)
-    t["documents"].repartition(4).write.mode("overwrite").parquet(chunked)
     doc_stream = (
         spark.readStream.schema(FIXTURE_SCHEMAS["documents"])
         .option("maxFilesPerTrigger", 1)

@@ -74,11 +74,6 @@ def render_matches_html(raw: DataFrame) -> DataFrame:
     return raw.select(line.alias("value")).unionByName(noise)
 
 
-def write_html_fixture(raw: DataFrame, path: str) -> None:
-    """Materialize rendered pages as text files (distributed write)."""
-    render_matches_html(raw).write.mode("overwrite").text(path)
-
-
 def read_html_matches(spark: SparkSession, path: str) -> DataFrame:
     """Parse saved results pages → MATCH_RAW-shaped rows.
 

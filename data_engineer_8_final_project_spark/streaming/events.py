@@ -23,12 +23,14 @@ broker.
 
 from __future__ import annotations
 
+import functools
 import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import EVENT_PROPS, EVENTS
+from ..stage import replay, scratch
 
 _sink_ids = itertools.count()
 
@@ -193,65 +195,36 @@ def session_window_stream(
     availableNow's final no-data micro-batch then flushes every session.
     """
     import datetime as dt
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from ..catalog import _assert_events_ts_format
 
     src = os.path.join(sf_dir, "events.parquet")
     _assert_events_ts_format(src)
-    # Stage-dir key = fingerprint of the ABSOLUTE source path + its
-    # stat (mtime, size): two sf dirs sharing a basename get distinct
-    # stages, and a changed fixture at the same path restages instead
-    # of silently reusing stale data.
-    # _STAGE_FORMAT bumps force a restage when the staging CODE changes
-    # (v2: ts staged as TIMESTAMP(µs), not INT64-nanos) — without it a
-    # stale /tmp stage written by older code would be silently replayed.
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"v2:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{n_chunks}".encode()
-    ).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"spark_graft_events_eos_{key}")
-    done_marker = os.path.join(stage, "_staged_ok")
-    if not os.path.exists(done_marker):
+
+    def chunks():
         batch = spark.read.schema(EVENTS).parquet(src)
         lo, hi = batch.agg(F.min("ts"), F.max("ts")).collect()[0]  # bounded: two scalars
         # Replay order must be (roughly) event-time order: the file source
         # feeds micro-batches in mtime order, and once the watermark
         # advances past a later batch's data those rows are dropped as
-        # late. Cut the fixture into disjoint ascending time ranges and
-        # write them sequentially, then pin EXPLICIT strictly-increasing
-        # mtimes on the staged part files (os.utime): on filesystems
-        # with coarse mtime granularity two sequential writes can tie,
-        # and the source's tiebreak over random part-file names could
-        # replay a later chunk first, dropping the earlier one as late.
-        # Staging is input prep (deterministic from the fixture), done
-        # once per fixture content and reused across runs.
-        shutil.rmtree(stage, ignore_errors=True)
-        # n_chunks ascending time slices + the sentinel file; the
-        # default 2 keeps the replay bit-identical to the pre-r14
-        # staging, and the A/B harness raises it to measure the
-        # batch-count cost law on this JVM-side consumer
+        # late. Cut the fixture into n_chunks disjoint ascending time
+        # ranges (the default 2 keeps the replay bit-identical to the
+        # pre-r14 staging; the A/B harness raises it to measure the
+        # batch-count cost law on this JVM-side consumer), then the
+        # sentinel file.
         cuts = [lo + (hi - lo) * i // n_chunks for i in range(n_chunks + 1)]
         cuts[-1] = hi + dt.timedelta(microseconds=1)
-        from .. import staging
-
-        staged_so_far: set[str] = set()
-        for i in range(n_chunks):
-            batch.filter((F.col("ts") >= cuts[i]) & (F.col("ts") < cuts[i + 1])).coalesce(
-                1
-            ).write.mode("append").parquet(stage)
-            # whole seconds: coarse-fs safe
-            staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + i, staged_so_far)
         sentinel = spark.createDataFrame(
             [(-1, hi + dt.timedelta(days=10), -1, EOS_EVENT_TYPE, 0.0, "{}")],
             EVENTS,
         )
-        sentinel.coalesce(1).write.mode("append").parquet(stage)
-        staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + n_chunks, staged_so_far)
-        open(done_marker, "w").close()
+        return [
+            batch.filter((F.col("ts") >= cuts[i]) & (F.col("ts") < cuts[i + 1]))
+            for i in range(n_chunks)
+        ] + [sentinel], None
+
+    stage, _ = replay(spark, "events_eos", src, (n_chunks,), chunks)
     events = (
         spark.readStream.schema(EVENTS)
         .option("maxFilesPerTrigger", 1)
@@ -434,35 +407,24 @@ def run_available_now_spilled(
     import glob as _glob
     import os
     import shutil
-    import tempfile
 
     spark = stream_df.sparkSession
-    root = tempfile.mkdtemp(prefix="spark_graft_drain_")
+    root = scratch(spark, "drain")
     out_dir = os.path.join(root, "out")
     schema = stream_df.schema  # captured for the zero-row read-back
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        (
-            df.withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .partitionBy("_epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
-        )
-
-    _drive_available_now(
-        spark,
-        lambda: (
-            stream_df.writeStream.outputMode(output_mode)
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        ),
-        state_partitions,
-        progress_out,
-    )
     try:
+        _drive_available_now(
+            spark,
+            lambda: (
+                stream_df.writeStream.outputMode(output_mode)
+                .foreachBatch(functools.partial(_write_epoch, out_dir))
+                .option("checkpointLocation", os.path.join(root, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            ),
+            state_partitions,
+            progress_out,
+        )
         # Zero emitted rows overall -> no parquet files land (an empty
         # batch writes only _SUCCESS) and a bare read would raise
         # 'Unable to infer schema'; return an empty frame with the
@@ -481,6 +443,18 @@ def streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(agg).orderBy("window_start", "event_type")
 
 
+def _write_epoch(path: str, df: DataFrame, epoch_id: int) -> None:
+    """foreachBatch body of both parquet sinks (see
+    :func:`stream_to_parquet_exactly_once`)."""
+    (
+        df.withColumn("_epoch", F.lit(epoch_id))
+        .write.mode("overwrite")
+        .partitionBy("_epoch")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
+
+
 def stream_to_parquet_exactly_once(
     stream_df: DataFrame, path: str, checkpoint_dir: str
 ) -> None:
@@ -493,27 +467,13 @@ def stream_to_parquet_exactly_once(
     the durable-sink counterpart of the memory sink used by tests —
     same pipeline, exactly-once into the lake.
     """
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        (
-            df.withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .partitionBy("_epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
-
     q = (
-        stream_df.writeStream.foreachBatch(write_batch)
+        stream_df.writeStream.foreachBatch(functools.partial(_write_epoch, path))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-
-
-#: time-ordered stage dirs already scheduled for atexit removal.
-_TORDER_STAGES: set[str] = set()
 
 
 def _stage_time_ordered_replay(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
@@ -531,45 +491,29 @@ def _stage_time_ordered_replay(spark: SparkSession, sf_dir: str, n_chunks: int =
     ``lo + k*span//n`` — deterministic for any consumer that wants to
     reason about batch contents.
     """
-    import atexit
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
-    from .. import staging
     from ..catalog import _assert_events_ts_format
 
     src = os.path.join(sf_dir, "events.parquet")
     _assert_events_ts_format(src)
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"torder-v1:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{n_chunks}:{os.getpid()}".encode()
-    ).hexdigest()[:12]
-    staging.sweep_stale_stage_dirs("spark_graft_torder_")
-    stage = os.path.join(tempfile.gettempdir(), f"spark_graft_torder_{key}")
-    done = os.path.join(stage, "_staged_ok")
-    if stage not in _TORDER_STAGES:
-        _TORDER_STAGES.add(stage)
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    if not os.path.exists(done):
+
+    def chunks():
         batch = spark.read.schema(EVENTS).parquet(src)
         lo_us, hi_us = batch.agg(
             F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
         ).collect()[0]  # bounded: two scalars
         span = hi_us - lo_us
         us = F.unix_micros(F.col("ts"))
-        shutil.rmtree(stage, ignore_errors=True)
-        staged: set[str] = set()
+        frames = []
         for i in range(n_chunks):
             lo_cut = lo_us + i * span // n_chunks
             hi_cut = lo_us + (i + 1) * span // n_chunks
             cond = (us >= lo_cut) & (us < hi_cut) if i < n_chunks - 1 else (us >= lo_cut)
-            batch.filter(cond).coalesce(1).write.mode("append").parquet(stage)
-            # whole seconds: coarse-fs safe
-            staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + i, staged)
-        open(done, "w").close()
-    return stage
+            frames.append(batch.filter(cond))
+        return frames, None
+
+    return replay(spark, "torder", src, (n_chunks,), chunks)[0]
 
 
 def view_click_stream_join(
@@ -659,11 +603,6 @@ def segment_enriched_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(agg, output_mode="complete")
 
 
-#: wmdrop stage dirs already scheduled for atexit removal (one
-#: registration per (process, stage); the dirs are pid-scoped).
-_WMDROP_STAGES: set[str] = set()
-
-
 def _stage_wmdrop_replay(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events fixture as a replay WITH PLANTED LATE ARRIVALS.
 
@@ -683,29 +622,15 @@ def _stage_wmdrop_replay(spark: SparkSession, sf_dir: str) -> str:
     (``lo + (hi - lo) // k``) so the DuckDB oracle replays the planted
     set bit-exactly with ``epoch_us`` + integer division.
     """
-    import atexit
     import datetime as dt
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
-    from .. import staging
     from ..catalog import _assert_events_ts_format
 
     src = os.path.join(sf_dir, "events.parquet")
     _assert_events_ts_format(src)
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"wmdrop-v1:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{os.getpid()}".encode()
-    ).hexdigest()[:12]
-    staging.sweep_stale_stage_dirs("spark_graft_wmdrop_")
-    stage = os.path.join(tempfile.gettempdir(), f"spark_graft_wmdrop_{key}")
-    done = os.path.join(stage, "_staged_ok")
-    if stage not in _WMDROP_STAGES:
-        _WMDROP_STAGES.add(stage)
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    if not os.path.exists(done):
+
+    def chunks():
         batch = spark.read.schema(EVENTS).parquet(src)
         lo_us, hi_us = batch.agg(
             F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
@@ -729,27 +654,20 @@ def _stage_wmdrop_replay(spark: SparkSession, sf_dir: str) -> str:
                 "(roughly a >=2.5h span) so every planted copy is behind "
                 "the watermark; use a longer-span fixture"
             )
-        shutil.rmtree(stage, ignore_errors=True)
         us = F.unix_micros(F.col("ts"))
-        chunks = [
-            batch.filter(us < mid_us),
-            batch.filter(us >= mid_us),
-            batch.filter(us < eighth_us),  # planted late replays
-        ]
-        staged: set[str] = set()
-        for i, chunk in enumerate(chunks):
-            chunk.coalesce(1).write.mode("append").parquet(stage)
-            # whole seconds: coarse-fs safe
-            staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + i, staged)
         hi = dt.datetime.fromtimestamp(hi_us / 1e6, dt.timezone.utc).replace(tzinfo=None)
         sentinel = spark.createDataFrame(
             [(-1, hi + dt.timedelta(days=10), -1, EOS_EVENT_TYPE, 0.0, "{}")],
             EVENTS,
         )
-        sentinel.coalesce(1).write.mode("append").parquet(stage)
-        staging.pin_new_file_mtimes(stage, st.st_mtime + 4, staged)
-        open(done, "w").close()
-    return stage
+        return [
+            batch.filter(us < mid_us),
+            batch.filter(us >= mid_us),
+            batch.filter(us < eighth_us),  # planted late replays
+            sentinel,
+        ], None
+
+    return replay(spark, "wmdrop", src, (), chunks)[0]
 
 
 def watermark_drop_audit(
@@ -816,10 +734,6 @@ def watermark_drop_audit(
     )
 
 
-#: wmdedup stage dirs already scheduled for atexit removal.
-_WMDEDUP_STAGES: set[str] = set()
-
-
 def _stage_wmdedup_replay(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Stage the events fixture as a duplicate-delivery replay for
     ``dropDuplicatesWithinWatermark``. Returns ``(stage_dir, delay_us)``.
@@ -855,29 +769,14 @@ def _stage_wmdedup_replay(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     same batch as its eviction is still suppressed — batches 3/4 are
     therefore separate).
     """
-    import atexit
-    import hashlib
-    import json
     import os
-    import shutil
-    import tempfile
 
-    from .. import staging
     from ..catalog import _assert_events_ts_format
 
     src = os.path.join(sf_dir, "events.parquet")
     _assert_events_ts_format(src)
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"wmdedup-v2:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}:{os.getpid()}".encode()
-    ).hexdigest()[:12]
-    staging.sweep_stale_stage_dirs("spark_graft_wmdedup_")
-    stage = os.path.join(tempfile.gettempdir(), f"spark_graft_wmdedup_{key}")
-    done = os.path.join(stage, "_staged_ok")
-    if stage not in _WMDEDUP_STAGES:
-        _WMDEDUP_STAGES.add(stage)
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    if not os.path.exists(done):
+
+    def chunks():
         batch = spark.read.schema(EVENTS).parquet(src)
         lo_us, hi_us, n_rows, n_keys = batch.agg(
             F.min(F.unix_micros("ts")),
@@ -906,24 +805,16 @@ def _stage_wmdedup_replay(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
         shifted = lambda cond, delta: batch.filter(cond).withColumn(  # noqa: E731
             "ts", F.timestamp_micros(us + F.lit(delta))
         )
-        chunks = [
+        return [
             batch.filter(us < mid),
             batch.filter(us >= mid).unionByName(
                 shifted((us >= lo_us + 3 * span // 8) & (us < mid), span // 16)
             ),
             batch.filter((us >= lo_us + 2 * span // 8) & (us < lo_us + 3 * span // 8)),
             shifted(us < lo_us + span // 8, 7 * span // 8),
-        ]
-        shutil.rmtree(stage, ignore_errors=True)
-        staged: set[str] = set()
-        for i, chunk in enumerate(chunks):
-            chunk.coalesce(1).write.mode("append").parquet(stage)
-            # whole seconds: coarse-fs safe
-            staging.pin_new_file_mtimes(stage, st.st_mtime + 1 + i, staged)
-        with open(done, "w") as f:
-            json.dump({"delay_us": span // 4}, f)
-    with open(done) as f:
-        return stage, json.load(f)["delay_us"]
+        ], span // 4
+
+    return replay(spark, "wmdedup", src, (), chunks)
 
 
 def dedup_stream_watermarked(

@@ -24,6 +24,13 @@ Two more patterns guard the per-session fixture memo
    last — queries bind DataFrames (``spark.sql(text, name=df)``);
 5. ``registry.tables_for``, the old reload-per-query path, stays gone.
 
+One guards the scratch-space owner (``stage.py``):
+
+6. a module that picks its own temp dir, registers its own exit hook
+   or names its own ``spark_graft_*`` dir escapes the one root that is
+   reaped at exit, swept when orphaned and refused on a cluster
+   master without a shared base.
+
 These are ALLOWLIST tests, not bans: every existing site was
 adjudicated in the r13 sweep (SURVEY §13); a NEW site fails here until
 it is adjudicated (projected / bounded-keyspace / inside the helper)
@@ -192,3 +199,21 @@ def test_nothing_uses_tables_for():
                     if re.search(r"\btables_for\b", open(p).read()):
                         hits.append(os.path.relpath(p, ROOT))
     assert hits == [], f"{hits} name registry.tables_for: call catalog.tables"
+
+
+def test_only_the_stage_owner_makes_scratch_dirs():
+    """Pattern 6: temp dirs, exit hooks and ``spark_graft_*`` names live
+    in stage.py alone; everything else asks it (``stage.scratch``,
+    ``stage.replay``, ``stage.stage_frame``)."""
+    allowed = {
+        ("stage.py", "<module>"),  # the one atexit hook
+        ("stage.py", "_sweep"),
+        ("stage.py", "root"),
+    }
+    got = _sites(r"tempfile\.(gettempdir|mkdtemp)\(|atexit\.register\b|[\"']spark_graft_")
+    assert got == allowed, (
+        f"scratch-dir site set changed: {got ^ allowed}. Get scratch space "
+        "from stage.py (scratch / replay / stage_frame) so it lives under "
+        "the process root: reaped at exit, swept when orphaned, and "
+        "placed on spark.graft.stage.dir on a cluster master."
+    )

@@ -266,13 +266,15 @@ def test_funnel_state_survives_micro_batches(spark, sf_dir):
     from data_engineer_8_final_project_spark.registry import all_queries
     from data_engineer_8_final_project_spark.queries import streaming_q  # noqa: F401
     from data_engineer_8_final_project_spark.streaming import events as ev, stateful
-    import glob, os, tempfile
+    import glob, os
+
+    from data_engineer_8_final_project_spark import stage as scratch
 
     # run the registered query once to (re)build the stage, then replay
     # the staged files through the raw update-mode sink to inspect
     # per-batch emissions
     all_queries()["event_funnel_stream"].fn(spark, sf_dir).collect()
-    stages = glob.glob(os.path.join(tempfile.gettempdir(), "spark_graft_funnel_*"))
+    stages = glob.glob(os.path.join(scratch.root(spark), "funnel_*"))
     assert stages, "staged replay dir missing"
     stage = max(stages, key=os.path.getmtime)
     n_files = len(glob.glob(os.path.join(stage, "*.parquet")))
@@ -614,7 +616,7 @@ def test_event_streams_consume_directory_shaped_sources(spark, sf_dir, tmp_path)
 
     from pyspark.sql import functions as F
 
-    from data_engineer_8_final_project_spark import staging
+    from data_engineer_8_final_project_spark import stage
 
     events = catalog.tables(spark, sf_dir)["events"]
     d = tmp_path / "dirshaped"
@@ -636,7 +638,7 @@ def test_event_streams_consume_directory_shaped_sources(spark, sf_dir, tmp_path)
             [F.col("ts") < t1, (F.col("ts") >= t1) & (F.col("ts") < t2), F.col("ts") >= t2]
         ):
             events.filter(cond).coalesce(1).write.mode("append").parquet(edir)
-            staging.pin_new_file_mtimes(edir, 1_000_000_000 + i, pinned)
+            stage.pin_new_file_mtimes(edir, 1_000_000_000 + i, pinned)
     finally:
         spark.conf.set("spark.sql.parquet.outputTimestampType", prev_ts_type)
     for t in catalog.TABLE_NAMES:
@@ -700,19 +702,33 @@ def test_spilled_drain_returns_empty_frame_on_zero_emissions(spark, sf_dir):
     assert [f.name for f in out.schema.fields] == ["event_id", "ts"]
 
 
-def test_spilled_drain_reclaims_spill_root_eagerly(spark, sf_dir, tmp_path, monkeypatch):
+def test_spilled_drain_reclaims_spill_root_eagerly(spark, sf_dir, monkeypatch):
     """ADVICE r12 #1: the spill root (parquet + checkpoint) must be
     removed before the drain returns — a long bench/scale session
     running many corpus-scaling drains must not accumulate temp disk
     until process exit. The read-back is localCheckpoint-ed first, so
     the returned frame survives the removal."""
-    import tempfile
+    import glob
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    from data_engineer_8_final_project_spark import stage
+
+    def drains():
+        return glob.glob(os.path.join(stage.root(spark), "drain_*"))
+
+    # record the spill roots present while each stream runs, so the
+    # empty-after checks below cannot pass by looking in the wrong place
+    seen = []
+    drive = ev._drive_available_now
+
+    def spy(*args):
+        drive(*args)
+        seen.append(drains())
+
+    monkeypatch.setattr(ev, "_drive_available_now", spy)
     stream = ev.read_events_stream(spark, sf_dir).select("event_id", "ts")
     out = ev.run_available_now_spilled(stream)
-    leftovers = list(tmp_path.glob("spark_graft_drain_*"))
-    assert leftovers == [], f"spill roots not reclaimed: {leftovers}"
+    assert len(seen) == 1 and len(seen[0]) == 1, f"drain dir not where expected: {seen}"
+    assert drains() == [], f"spill roots not reclaimed: {drains()}"
     # the frame is lineage-free: still readable after its files are gone
     n = out.count()
     assert n > 0 and out.count() == n
@@ -724,7 +740,8 @@ def test_spilled_drain_reclaims_spill_root_eagerly(spark, sf_dir, tmp_path, monk
         .select("event_id", "ts")
     )
     assert empty.count() == 0
-    assert list(tmp_path.glob("spark_graft_drain_*")) == []
+    assert len(seen) == 2 and len(seen[1]) == 1
+    assert drains() == []
 
 
 def test_replay_files_per_trigger_law(sf_dir):
