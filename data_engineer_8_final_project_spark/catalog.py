@@ -30,8 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .schemas import FIXTURE_SCHEMAS
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 TABLE_NAMES = tuple(FIXTURE_SCHEMAS)
 
 #: (resolved path, mtime_ns) pairs already footer-checked this process.
@@ -148,7 +146,7 @@ def _memo(spark: SparkSession) -> dict[str, tuple[tuple[int, ...], Mapping[str, 
     return spark.__dict__.setdefault(_MEMO_ATTR, {})
 
 
-def load(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
+def load(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read every fixture table, register each as a temp view, and
     store the frames as this session's :func:`tables` entry for
     ``sf_dir``.
@@ -169,7 +167,7 @@ def load(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFra
     return frames
 
 
-def tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Mapping[str, DataFrame]:
+def tables(spark: SparkSession, sf_dir: str) -> Mapping[str, DataFrame]:
     """The fixture tables of ``sf_dir`` for ``spark``, loaded once.
 
     Returns this session's cached read-only name → DataFrame mapping,

@@ -311,7 +311,7 @@ def simhash_near_dup_pairs(documents: DataFrame, max_hamming: int = 12) -> DataF
     OUTPUT CONTRACT — quadratic in duplicate-group size, by design: a
     group of n mutual near-dups emits n(n-1)/2 pairs, so on dup-dense
     corpora the RESULT itself explodes even though the plan is bucketed
-    (SCALE_r14.md: 128× replication → 2.45e9 pairs). This form is a
+    (r14: 128× replication → 2.45e9 pairs). This form is a
     DIAGNOSTIC for inspecting pair structure; production dedup at scale
     consumes the linear-output forms instead: per-document
     :func:`simhash_dedup_verdicts`, or cluster-level ``dup_clusters`` /
@@ -334,7 +334,7 @@ def _simhash_pairs(
     consumer only needs the distinct DROPPED-doc set, so its own
     ``distinct(doc_b)`` subsumes pair dedup — and on a high-duplication
     corpus the pair-level distinct is the dominant hash aggregation
-    (2.45e9 rows at the r14 128x leg, SCALE_r14.md) that the verdict
+    (2.45e9 rows at the r14 128x leg) that the verdict
     form exists to avoid."""
     band_mask = (1 << SIMHASH_BAND_BITS) - 1
     n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
@@ -377,7 +377,7 @@ def _simhash_pairs(
 
 def simhash_dedup_verdicts(documents: DataFrame, max_hamming: int = 12) -> DataFrame:
     """Per-document keep/drop verdicts from banded SimHash — the form a
-    production dedup CONSUMES (r14 scale lesson, SCALE_r14.md: on a
+    production dedup CONSUMES (r14 scale lesson: on a
     high-duplication corpus the all-pairs set is output-quadratic in
     dup-group size — 2.45e9 rows at the 128x leg — while the verdict
     frame is always exactly |documents| rows).

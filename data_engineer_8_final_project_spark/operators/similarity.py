@@ -42,8 +42,8 @@ def _bytes_conf(spark, key: str) -> int:
 
 #: Derived-cell policy for the corpus-wide knn family (VERDICT r8
 #: item 3: "make the benched shape the production shape"). With cells
-#: PINNED, within-cell pair volume grows as n²/cells — SCALE_r08
-#: measured knn_graph at 13.9× wall for 8× data. Scaling cells
+#: PINNED, within-cell pair volume grows as n²/cells — r8 measured
+#: knn_graph at 13.9× wall for 8× data. Scaling cells
 #: LINEARLY with corpus size keeps the average cell near CELL_TARGET
 #: vectors, so pair volume stays ~n·CELL_TARGET (linear) and per-task
 #: work is bounded by CELL_TARGET². The floor keeps tiny fixtures on
@@ -56,8 +56,8 @@ CELL_TARGET = 128
 CELL_FLOOR = 16
 #: Above this cell count the flat argmin's n_cells·dim per-row
 #: assignment cost dominates and knn_graph switches to hierarchical
-#: routing ((n_parents + group)·dim per row; scripts/knn_routing_ab.py
-#: measured 1.76× at edge agreement 1.0 on 8×/256 cells). Routing is
+#: routing ((n_parents + group)·dim per row; an A/B measured 1.76× at
+#: edge agreement 1.0 on 8×/256 cells). Routing is
 #: approximate ONLY near cell boundaries — same leaf set, and it can
 #: never fire at an oracle-checked scale (all fixtures derive
 #: CELL_FLOOR cells), so strict-hash replay is preserved where it is

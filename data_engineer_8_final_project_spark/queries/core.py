@@ -40,7 +40,6 @@ from ..stage import stage_frame
     ORDER BY l_returnflag, l_linestatus
     """,
     survey_ref="§2.4 A1/A2 (generalized multi-agg; TPC-H Q1 shape)",
-    tags=("bench",),
 )
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -173,7 +172,6 @@ def q_full_outer_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY nation
     """,
     survey_ref="§2.3 equi-join chain + §2.4 A2 (multi-join rollup)",
-    tags=("bench",),
 )
 def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate-below-join: revenue/line_count collapse to one row per
@@ -519,7 +517,6 @@ def q_cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
     survey_ref="§2.3 widening: selective 3-way join + top-k (TPC-H Q3 shape)",
-    tags=("bench",),
 )
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both date predicates and the segment filter must reach the scans
@@ -568,7 +565,6 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
     survey_ref="§2.3 widening: 4-way join, returned-revenue rollup (TPC-H Q10 shape)",
-    tags=("bench",),
 )
 def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate-below-join (same shape as revenue_by_nation): returned
@@ -1750,7 +1746,6 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l.l_linestatus
     """,
     survey_ref="§2.3 widening: join + conditional two-way count (TPC-H Q12 shape)",
-    tags=("bench",),
 )
 def q_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q12 shape: fact-fact equi-join with a post-join interval
@@ -1860,7 +1855,6 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY nation
     """,
     survey_ref="extended: grouped closed-form OLS trend (integer-moment regression)",
-    tags=("bench",),
 )
 def q_revenue_trend_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation revenue trend by closed-form least squares — the
@@ -1948,7 +1942,6 @@ def q_revenue_trend_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM coded GROUP BY segment ORDER BY segment
     """,
     survey_ref="extended: RFM segmentation (rank-quartile coding, distributed global rank)",
-    tags=("bench",),
 )
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic RFM segmentation: recency/frequency/monetary quartile
@@ -2057,7 +2050,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 15
     """,
     survey_ref="extended: market-basket brand affinity (bounded self-join co-occurrence + lift)",
-    tags=("bench",),
 )
 def q_brand_affinity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top co-purchased brand pairs with lift — the affinity-analysis
@@ -2187,7 +2179,6 @@ def brand_affinity(lineitem: DataFrame, part: DataFrame, k: int = 15) -> DataFra
     ORDER BY d.decile
     """,
     survey_ref="extended: revenue concentration deciles (Lorenz/Pareto, distributed rank)",
-    tags=("bench",),
 )
 def q_revenue_pareto_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue-concentration report: customers ranked into deciles by
@@ -3087,7 +3078,6 @@ def _poisson_w_sql(u: str) -> str:
     GROUP BY f.n_orders, f.mean_value
     """.replace("{W}", _poisson_w_sql("u")),
     survey_ref="extended: Poisson-bootstrap CI (one-pass hash-weighted resampling)",
-    tags=("bench",),
 )
 def q_revenue_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """95% bootstrap confidence interval for the mean order value in

@@ -285,7 +285,6 @@ CHUNK_STRIDE = 12
     ORDER BY doc_id, chunk_id
     """,
     survey_ref="extended: overlapping token-window chunking (RAG / context prep)",
-    tags=("bench",),
 )
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document → overlapping token-window chunks, one narrow pass.
@@ -456,7 +455,6 @@ def _bm25_oracle(k: int) -> str:
     "bm25_doc_ranking",
     oracle=_bm25_oracle(k=15),
     survey_ref="extended: BM25 document ranking for a fixed term query (retrieval scoring)",
-    tags=("bench",),
 )
 def q_bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical retrieval scoring — the sparse half of a RAG / curation
@@ -543,7 +541,6 @@ def q_bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.lang, c.source
     """,
     survey_ref="extended: chi-square contingency cells (categorical independence audit)",
-    tags=("bench",),
 )
 def q_lang_source_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical independence audit of the corpus mix: per
@@ -603,7 +600,6 @@ def q_lang_source_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked ORDER BY doc_id
     """,
     survey_ref="extended: percentile-rank feature normalization (distributed global rank)",
-    tags=("bench",),
 )
 def q_quality_percentile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature normalization for curation models: each document's
@@ -733,7 +729,6 @@ def q_token_prefix_completions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cms_est DESC, token ASC LIMIT 15
     """,
     survey_ref="extended: Count-Min-sketch heavy hitters (mergeable fixed-size state, one pass)",
-    tags=("bench",),
 )
 def q_token_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter tokens through a Count-Min sketch — the streaming/

@@ -48,7 +48,6 @@ _DUCK_STOPWORDS = "['the', 'a', 'of', 'and', 'to', 'in']"
     ORDER BY lang
     """,
     survey_ref="extended: token counting / corpus stats",
-    tags=("bench",),
 )
 def q_text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -109,7 +108,6 @@ def q_doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
     survey_ref="extended: token frequency (explode + agg + top-k)",
-    tags=("bench",),
 )
 def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -221,7 +219,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 500
     """,
     survey_ref="extended: n-gram Jaccard near-dup (shingle self-join)",
-    tags=("bench",),
 )
 def q_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -373,8 +370,8 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_a, doc_b
     """,
     survey_ref="extended: MinHash-LSH near-dup, exact-verified (scale path)",
-    # not in the bench set: minhash_native_pairs benches the same tier
-    # strictly faster; the candidate-recall gate lives in tests/test_dedup.py
+    # minhash_native_pairs computes the same tier strictly faster; the
+    # candidate-recall gate lives in tests/test_dedup.py
 )
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -428,8 +425,8 @@ def _simhash_oracle(max_hamming: int) -> str:
     oracle=_simhash_oracle(max_hamming=12),
     # DIAGNOSTIC form (VERDICT r14 item 4): output is quadratic in
     # duplicate-group size by contract (see simhash_near_dup_pairs
-    # docstring) — the bench tag and coverage primary moved to the
-    # linear-output production twin simhash_dedup_verdicts in r15.
+    # docstring) — the coverage primary moved to the linear-output
+    # production twin simhash_dedup_verdicts in r15.
     survey_ref="extended: SimHash near-dup pairs (diagnostic; banded LSH over 60-bit signatures)",
 )
 def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -463,11 +460,10 @@ def _simhash_verdict_oracle(max_hamming: int) -> str:
     # verified strict-hash MATCH vs this oracle at sf0.01 and sf0.001
     # in the r14 session). The production-shaped twin of
     # simhash_near_dup: |documents| verdict rows instead of the
-    # output-quadratic pair set (SCALE_r14.md measured 2.45e9 pairs at
+    # output-quadratic pair set (r14 measured 2.45e9 pairs at
     # the 128x leg — the verdict form is what a dedup gate consumes).
     oracle=_simhash_verdict_oracle(max_hamming=12),
     survey_ref="extended: SimHash dedup verdicts (min-id greedy, bounded output)",
-    tags=("bench",),
 )
 def q_simhash_dedup_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -543,7 +539,6 @@ def _minhash_native_oracle(
     "minhash_native_pairs",
     oracle=_minhash_native_oracle(),
     survey_ref="extended: native banded MinHash near-dup (built-ins, value-exact oracle)",
-    tags=("bench",),
 )
 def q_minhash_native_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -744,7 +739,6 @@ def _ivf_oracle(query_vec_id: int, n_cells: int, n_probe: int, k: int) -> str:
     "ivf_ann_topk",
     oracle=_ivf_oracle(query_vec_id=0, n_cells=16, n_probe=4, k=10),
     survey_ref="extended: IVF-Flat ANN top-k (coarse-quantized scale path)",
-    tags=("bench",),
 )
 def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -1027,7 +1021,6 @@ def _ivf2_oracle(
         query_vec_id=0, n_cells=16, n_parents=4, n_probe_l1=2, n_probe=4, k=10
     ),
     survey_ref="extended: two-level (hierarchical) IVF ANN top-k (cell-count scale path)",
-    tags=("bench",),
 )
 def q_ivf2_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical IVF (operators/similarity.ivf2_topk): parent-then-
@@ -1113,7 +1106,6 @@ def _pq_oracle(
     "pq_adc_topk",
     oracle=_pq_oracle(query_vec_id=0, dim=64, n_sub=8, n_codes=32, shortlist=100, k=10),
     survey_ref="extended: PQ-ADC ANN top-k (memory-compressed scale path)",
-    tags=("bench",),
 )
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-Quantization ADC top-k — the compressed ANN tier
@@ -1219,7 +1211,6 @@ def _ivfpq_oracle(
         shortlist=100, k=10,
     ),
     survey_ref="extended: composed IVF-PQ ANN top-k (FAISS IVFADC production tier)",
-    tags=("bench",),
 )
 def q_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed IVF-PQ top-k (operators/similarity.ivfpq_topk): IVF
@@ -1425,8 +1416,8 @@ def _knn_cells(sf_dir: str) -> tuple[int, int | None]:
     count derived from the embeddings row count (parquet footer — no
     Spark job), hierarchical routing once the count clears
     ROUTING_MIN_CELLS. All fixture SFs derive the floor (16, flat) —
-    identical values to every recorded green row; scale-script
-    replicas derive proportionally more cells, so the benched shape
+    identical values to every recorded green row; scaled replicas
+    derive proportionally more cells, so the benched shape
     IS the production shape (VERDICT r8 item 3).
 
     Routing assignments are routing-APPROXIMATE (same leaf set;
@@ -1436,9 +1427,7 @@ def _knn_cells(sf_dir: str) -> tuple[int, int | None]:
     tests/test_derived_cells.py). A fixture large enough to engage
     routing would hash-mismatch its oracle, so engagement WARNS loudly
     with the cause (r9 ADVICE), and ``SPARK_GRAFT_KNN_ROUTING=flat``
-    pins the exact flat argmin for oracle verification at any size
-    (the scale scripts, which compare wall-clock rather than hashes,
-    keep the routing arm)."""
+    pins the exact flat argmin for oracle verification at any size."""
     n = catalog.parquet_row_count(os.path.join(sf_dir, "embeddings.parquet"))
     nc = similarity.derived_n_cells(n)
     parents = similarity.routing_parents(nc)
@@ -1537,7 +1526,6 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     "knn_graph",
     oracle=_knn_graph_oracle(k=3),
     survey_ref="extended: batch k-NN graph (cell-blocked all-vector neighbors)",
-    tags=("bench",),
 )
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide k-NN graph (every vector's top-3 cell-local
@@ -1636,7 +1624,6 @@ def _knn_communities_oracle(k: int, iters: int = 3) -> str:
     "knn_communities",
     oracle=_knn_communities_oracle(k=3, iters=3),
     survey_ref="extended: community detection over the k-NN graph (deterministic LPA)",
-    tags=("bench",),
 )
 def q_knn_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label-propagation communities over the k-NN graph
@@ -1661,7 +1648,6 @@ def q_knn_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     "knn_pagerank",
     oracle=_knn_pagerank_oracle(k=3, iters=3),
     survey_ref="extended: PageRank centrality over the k-NN graph (integer fixed-point)",
-    tags=("bench",),
 )
 def q_knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three power-iteration PageRank rounds over the k-NN graph
@@ -1686,7 +1672,6 @@ def q_knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantic_dedup",
     oracle=_semantic_dedup_oracle(n_cells=16, threshold=0.45),
     survey_ref="extended: SemDeDup cluster-blocked embedding dedup verdicts",
-    tags=("bench",),
 )
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al., arXiv:2303.09540) keep/drop verdicts:
@@ -1948,7 +1933,6 @@ def q_unpivot_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
     survey_ref="extended capstone: quality-filter → normalize → exact-dedup pipeline",
-    tags=("bench",),
 )
 def q_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed training-data cleaning pass a corpus actually gets:
@@ -2025,7 +2009,6 @@ _ORDER_CHAINS_SPARK_SQL = ORDER_CHAINS_RECURSIVE_SQL.replace("FROM orders\n", "F
     "order_chains_recursive",
     oracle=ORDER_CHAINS_RECURSIVE_SQL,
     survey_ref="extended: recursive CTE (Spark 4.1 WITH RECURSIVE, acyclic walk)",
-    tags=("bench",),
 )
 def q_order_chains_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runs ORDER_CHAINS_RECURSIVE_SQL with only its table reference
@@ -2277,7 +2260,6 @@ def _knn_triangles_oracle(k: int) -> str:
     "knn_triangle_stats",
     oracle=_knn_triangles_oracle(k=3),
     survey_ref="extended: k-NN graph triangle counts / local clustering coefficient",
-    tags=("bench",),
 )
 def q_knn_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighborhood density over the similarity graph: per-vector
@@ -2390,7 +2372,6 @@ def _cluster_balanced_oracle(
     "kmeans_clusters",
     oracle=_kmeans_oracle(k=8, rounds=2, scale=10**6, dim=64),
     survey_ref="extended: fixed-point Lloyd k-means corpus clustering (broadcast-centroid scale shape)",
-    tags=("bench",),
 )
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus clustering for curation: every embedding assigned to one
@@ -2408,7 +2389,6 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cluster_balanced_sample",
     oracle=_cluster_balanced_oracle(k=8, rounds=2, scale=10**6, dim=64, cap=50),
     survey_ref="extended: cluster-balanced corpus selection (learned-key per-cluster quota)",
-    tags=("bench",),
 )
 def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diversity-preserving selection: ≤50 exemplars per k-means topic
@@ -2458,7 +2438,6 @@ def _maxsim_oracle(query_vec_id: int, n_tokens: int, k: int, scale: int) -> str:
     "maxsim_multivector_topk",
     oracle=_maxsim_oracle(query_vec_id=0, n_tokens=4, k=10, scale=10**6),
     survey_ref="extended: multi-vector late-interaction retrieval (ColBERT-style MaxSim top-k)",
-    tags=("bench",),
 )
 def q_maxsim_multivector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-interaction reranking: each doc scored by
@@ -2641,7 +2620,6 @@ def _pq_recon_oracle(dim: int, n_sub: int, n_codes: int, scale: int) -> str:
     "pq_reconstruction_error",
     oracle=_pq_recon_oracle(dim=64, n_sub=8, n_codes=16, scale=10**6),
     survey_ref="extended: PQ codebook reconstruction-error audit (per-subspace SSE/MSE)",
-    tags=("bench",),
 )
 def q_pq_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Codebook-health audit for the PQ family: per-subspace total and
@@ -2698,7 +2676,6 @@ def _knn_kcore_oracle(k: int, core_k: int, rounds: int) -> str:
     "knn_kcore",
     oracle=_knn_kcore_oracle(k=3, core_k=3, rounds=3),
     survey_ref="extended: fixed-round k-core peeling over the k-NN graph",
-    tags=("bench",),
 )
 def q_knn_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Density skeleton of the similarity graph: 3 peel rounds at
@@ -2846,7 +2823,6 @@ def _embedding_moments(embeddings: DataFrame) -> DataFrame:
     ORDER BY i, j
     """,
     survey_ref="extended: one-pass embedding covariance (exact integer cross-moments; PCA prep)",
-    tags=("bench",),
 )
 def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Covariance matrix of the embedding dimensions in ONE pass — the
@@ -2954,7 +2930,6 @@ def _pca_oracle(rounds: int = 8) -> str:
         "extended: PCA top-component scores (distributed exact moments → "
         "bounded-model integer power iteration → literal-vector projection)"
     ),
-    tags=("bench",),
 )
 def q_embedding_pca_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every vector's projection onto the corpus's DOMINANT

@@ -341,7 +341,6 @@ def q_events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY event_type
     """,
     survey_ref="§2.9 T3 extended: semi-structured payloads via VARIANT (Spark 4)",
-    tags=("bench",),
 )
 def q_events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The VARIANT-typed twin of events_json_extract: props parses once

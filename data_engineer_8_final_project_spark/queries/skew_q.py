@@ -113,7 +113,6 @@ def user_dim(spark: SparkSession, n_rows: int = N_DIM) -> DataFrame:
     ORDER BY key_bucket
     """,
     survey_ref="extended: skewed big-big join (zipfian hot key, AQE skew-split shape)",
-    tags=("bench",),
 )
 def q_skewed_user_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Big-big enrichment join under a 30%-hot zipfian key.

@@ -174,7 +174,6 @@ def q_standings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, session_no
     """,
     survey_ref="extended: gap-based sessionization (window lag + running sum)",
-    tags=("bench",),
 )
 def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap sessionization (operators/sessions.py): lag over
@@ -238,7 +237,6 @@ def q_events_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.event_id
     """,
     survey_ref="extended: as-of backward join (operator Spark lacks natively)",
-    tags=("bench",),
 )
 def q_clicks_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Error attribution: each click paired with the same user's most
@@ -391,7 +389,6 @@ def q_events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, session_start
     """,
     survey_ref="§2.9 T3 widening: native session_window streaming with EOS flush",
-    tags=("bench",),
 )
 def q_events_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap sessions via Spark's NATIVE session_window in a streaming
@@ -718,7 +715,6 @@ EVENT_FUNNEL_ORACLE = """
     "event_funnel",
     oracle=EVENT_FUNNEL_ORACLE,
     survey_ref="extended: ordered conversion funnel (min-chained stages)",
-    tags=("bench",),
 )
 def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """view → click → purchase funnel with the order constraint: each
@@ -760,7 +756,6 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1, 2
     """,
     survey_ref="extended: weekly cohort retention matrix",
-    tags=("bench",),
 )
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic cohort retention: user's first-event week × active weeks.
@@ -822,7 +817,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
     survey_ref="extended: session path mining (ordered event-type sequences)",
-    tags=("bench",),
 )
 def q_session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Most common session event-type paths. Sessionization shares
@@ -927,7 +921,6 @@ def _ewma_expr() -> str:
     GROUP BY d.event_type ORDER BY d.event_type
     """,
     survey_ref="extended: robust MAD outlier screen (rank-exact medians)",
-    tags=("bench",),
 )
 def q_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type robust outlier screen: median, MAD, and the
@@ -952,7 +945,6 @@ def q_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events ORDER BY event_id
     """,
     survey_ref="extended: fixed-lag EWMA time-series feature (shared-expression determinism)",
-    tags=("bench",),
 )
 def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event trailing EWMA of the user's last 8 event values — the
@@ -1006,7 +998,6 @@ def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p GROUP BY channel ORDER BY channel
     """,
     survey_ref="extended: last-touch attribution (lookback-bounded carry-forward window)",
-    tags=("bench",),
 )
 def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marketing-style last-touch attribution: each purchase credits
@@ -1102,7 +1093,6 @@ def q_event_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, event_type, valid_from
     """,
     survey_ref="extended: SCD2 history build (validity intervals via LEAD)",
-    tags=("bench",),
 )
 def q_scd2_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD type-2 history: one LEAD window per (user, event_type) —
@@ -1148,7 +1138,6 @@ def q_scd2_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY event_type, bucket
     """,
     survey_ref="extended: fixed-width histogram (width_bucket analytics)",
-    tags=("bench",),
 )
 def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type value histogram over constant bucket bounds — one
@@ -1291,7 +1280,6 @@ def q_event_type_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p.event_id
     """,
     survey_ref="extended: SCD2 point-in-time feature join (half-open validity intervals, leakage-free enrichment)",
-    tags=("bench",),
 )
 def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-store enrichment done the scale way: build the per-user
@@ -1391,7 +1379,6 @@ def q_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY first_channel ORDER BY first_channel
     """,
     survey_ref="extended: conversion latency percentiles (nearest-rank, per first-touch channel)",
-    tags=("bench",),
 )
 def q_conversion_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-to-convert distribution: per first-touch channel, the p50
@@ -1452,7 +1439,6 @@ def q_conversion_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY entry_type ORDER BY entry_type
     """,
     survey_ref="extended: session bounce/engagement rollup by entry event type",
-    tags=("bench",),
 )
 def q_session_bounce_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engagement rollup per session ENTRY type: bounce rate
@@ -1534,7 +1520,6 @@ def q_session_bounce_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY t.prev_type, t.next_type
     """,
     survey_ref="extended: first-order Markov transition matrix over user event streams",
-    tags=("bench",),
 )
 def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Behavioral transition matrix: P(next event type | previous) per
@@ -1603,7 +1588,6 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id
     """,
     survey_ref="extended: time-weighted average over irregular event times (TWAP shape)",
-    tags=("bench",),
 )
 def q_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user time-weighted average value: each observation holds
@@ -1682,7 +1666,6 @@ def q_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, session_start
     """,
     survey_ref="extended: native session_window batch sessionization (engine-operator twin)",
-    tags=("bench",),
 )
 def q_event_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's BUILT-IN ``session_window`` run in batch mode — the
@@ -1731,7 +1714,6 @@ def q_event_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
     survey_ref="extended: hour-over-hour volume spike monitor (rounded-ratio rank)",
-    tags=("bench",),
 )
 def q_hourly_volume_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline-health monitor: the 10 largest hour-over-hour volume
@@ -1798,7 +1780,6 @@ def q_hourly_volume_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY r.cohort_week, r.week_offset
     """,
     survey_ref="extended: cohort lifetime-value curve (cumulative revenue per cohort user)",
-    tags=("bench",),
 )
 def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LTV curve per weekly cohort: purchase revenue by week offset
@@ -2073,7 +2054,6 @@ def q_revenue_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY day
     """,
     survey_ref="extended: exact rolling 7-day active users (bounded fan-out distinct)",
-    tags=("bench",),
 )
 def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The growth-metrics pair every product dashboard opens with:
@@ -2123,7 +2103,6 @@ def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM flags GROUP BY first_channel ORDER BY first_channel
     """,
     survey_ref="extended: churn rate by acquisition channel (horizon-relative inactivity)",
-    tags=("bench",),
 )
 def q_user_churn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Churn table by acquisition channel: users whose last activity

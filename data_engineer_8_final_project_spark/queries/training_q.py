@@ -222,7 +222,6 @@ def _dup_clusters_oracle(min_jaccard: float) -> str:
     "dup_clusters",
     oracle=_dup_clusters_oracle(min_jaccard=0.5),
     survey_ref="extended: near-dup cluster assignment (iterative connected components)",
-    tags=("bench",),
 )
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs → components: label every document with its near-dup
@@ -443,7 +442,6 @@ def q_dedup_stream_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pg GROUP BY doc_id ORDER BY doc_id
     """,
     survey_ref="extended: Gopher-style repetition quality gate",
-    tags=("bench",),
 )
 def q_doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -533,7 +531,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p ORDER BY doc_id
     """,
     survey_ref="extended capstone: full corpus->training-shards manifest",
-    tags=("bench",),
 )
 def q_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-plan training-data pipeline: length gate + Gopher repetition
@@ -601,7 +598,6 @@ def q_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
     survey_ref="extended: per-domain cap (skew-proof two-phase top-k per key)",
-    tags=("bench",),
 )
 def q_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -643,7 +639,6 @@ def q_per_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY d.doc_id
     """,
     survey_ref="extended: temperature-weighted source mixing (deterministic)",
-    tags=("bench",),
 )
 def q_temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -669,7 +664,6 @@ def q_temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
     survey_ref="extended: deterministic global shuffle order (distributed rank)",
-    tags=("bench",),
 )
 def q_training_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -794,7 +788,6 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY b.doc_id
     """,
     survey_ref="extended: span-level dedup stats (duplicated n-gram fraction)",
-    tags=("bench",),
 )
 def q_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -834,7 +827,6 @@ def q_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY t.doc_id
     """,
     survey_ref="extended: DSIR hashed-unigram importance weights (data selection)",
-    tags=("bench",),
 )
 def q_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Importance-resampling scores for quality-targeted data selection
@@ -877,7 +869,6 @@ def q_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY b.doc_id
     """,
     survey_ref="extended: add-1 bigram LM scoring (word-order quality proxy)",
-    tags=("bench",),
 )
 def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.tables(spark, sf_dir)
@@ -907,7 +898,6 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
     survey_ref="extended: weighted sampling w/o replacement (Efraimidis-Spirakis)",
-    tags=("bench",),
 )
 def q_weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed weighted sampling without replacement (Efraimidis &
@@ -962,7 +952,6 @@ def q_weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY source, sample_key DESC, doc_id
     """,
     survey_ref="extended: grouped weighted sampling w/o replacement (per-source quotas)",
-    tags=("bench",),
 )
 def q_weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum weighted sampling without replacement: the same
@@ -1038,7 +1027,6 @@ def q_weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY src, neg_rank
     """,
     survey_ref="extended: contrastive hard-negative mining (cell-blocked cross-label ANN)",
-    tags=("bench",),
 )
 def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-1 cross-label neighbor per vector
@@ -1390,7 +1378,6 @@ def q_near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg ORDER BY source
     """,
     survey_ref="extended: KMV distinct-count sketch per source + merged rollup (mergeable cardinality estimation)",
-    tags=("bench",),
 )
 def q_source_shingle_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source distinct-shingle cardinality WITHOUT an exact
@@ -1483,7 +1470,6 @@ def q_source_shingle_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY f.doc_id
     """.format(tok=_DUCK_TOKENS),
     survey_ref="extended: incremental ingest dedup (new batch vs frozen corpus, new-x-old pairs only)",
-    tags=("bench",),
 )
 def q_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Screen the incoming 20% slice against the frozen 80% corpus
@@ -1637,7 +1623,6 @@ CURATION_PIPELINE_ORACLE = """
         "exact dedup → near-dup leakage-safe split → per-source cap → "
         "token-budget pack"
     ),
-    tags=("bench",),
 )
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The consolidated training-data curation pass (VERDICT r8 item

@@ -17,7 +17,7 @@ order-insensitive value hash, so:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,21 +32,20 @@ class Query:
     fn: QueryFn
     oracle: str | None  # None → non-SQL-expressible; driver does rows-only check
     survey_ref: str = ""  # SURVEY.md §2 operator ids this query covers
-    tags: tuple[str, ...] = field(default=tuple)
 
 
 _REGISTRY: dict[str, Query] = {}
 
 
 def register(
-    name: str, oracle: str | None, survey_ref: str = "", tags: tuple[str, ...] = ()
+    name: str, oracle: str | None, survey_ref: str = ""
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref, tags=tags)
+        _REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, survey_ref=survey_ref)
         return fn
 
     return deco

@@ -53,10 +53,10 @@ def read_events_stream(
     stateful consumers pass a larger value at scale — per-batch cost
     there is dominated by touched-keys x per-group pandas invocation,
     so fewer, larger batches amortize it (r13 A/B on
-    user_totals_stateful, SCALE_r13.md).
+    user_totals_stateful).
 
-    When ``events.parquet`` is a DIRECTORY of part files (the scale
-    harness writes one), the glob filter would match nothing — the
+    When ``events.parquet`` is a DIRECTORY of part files (a replicated
+    corpus is one), the glob filter would match nothing — the
     part files' leaf names don't match ``events.parquet`` — and the
     stream would silently replay ZERO rows (r11 finding: a width A/B
     on a x64 replica returned rows=0). Directory sources are read
@@ -210,9 +210,8 @@ def session_window_stream(
         # advances past a later batch's data those rows are dropped as
         # late. Cut the fixture into n_chunks disjoint ascending time
         # ranges (the default 2 keeps the replay bit-identical to the
-        # pre-r14 staging; the A/B harness raises it to measure the
-        # batch-count cost law on this JVM-side consumer), then the
-        # sentinel file.
+        # pre-r14 staging; a larger value measures the batch-count
+        # cost law on this JVM-side consumer), then the sentinel file.
         cuts = [lo + (hi - lo) * i // n_chunks for i in range(n_chunks + 1)]
         cuts[-1] = hi + dt.timedelta(microseconds=1)
         sentinel = spark.createDataFrame(
@@ -251,7 +250,7 @@ def replay_files_per_trigger(src: str, target_batches: int = 4) -> int:
     the source has.
 
     The cost law (documented on user_running_totals; measured by the
-    r13 A/B, scripts/stateful_batch_ab.py, SCALE_r13.md): per-batch
+    r13 A/B): per-batch
     cost is dominated by touched-keys x one pandas invocation per
     group, so a replay's wall time is ~linear in BATCH COUNT when most
     keys appear in every batch — at 64x (32 part files, 96k users),
@@ -287,8 +286,8 @@ def state_width_for(src: str) -> int:
     8 and must NOT use this. On a cluster the clamp rises with
     executor memory; it must stay fixed across restarts of one
     checkpoint (availableNow replays with fresh checkpoints never hit
-    that). The source may be a directory of parts (the scale harness
-    writes one), so the probe sums physical files.
+    that). The source may be a directory of parts (a replicated corpus
+    is one), so the probe sums physical files.
     """
     import os as _os
 
@@ -395,14 +394,12 @@ def run_available_now_spilled(
     ``localCheckpoint(eager=True)``-ed (lineage-free, block-manager
     storage with disk spill — the same shape the memory-sink twin
     returns) and the temp dir is removed before returning, so a long
-    bench/scale session running many corpus-scaling drains does not
-    accumulate gigabytes under /tmp (ADVICE r12 #1 — the disk analogue
-    of the driver-heap leak this drain exists to avoid). Dead
-    checkpoint blocks are reaped by the long-lived harnesses that
-    interleave many drains in one JVM — scale_curve per rep, bench.py
-    between passes (ADVICE r13 #2); one-shot consumers (the grading
-    driver, pytest) hold at most one drain's blocks, bounded by the
-    emitted-row set, until session exit.
+    session running many corpus-scaling drains does not accumulate
+    gigabytes under /tmp (ADVICE r12 #1 — the disk analogue of the
+    driver-heap leak this drain exists to avoid). The checkpoint
+    blocks are not reaped here: each drain's blocks, bounded by its
+    emitted-row set, stay in the block manager at most until the
+    session ends.
     """
     import glob as _glob
     import os
@@ -483,7 +480,7 @@ def _stage_time_ordered_replay(spark: SparkSession, sf_dir: str, n_chunks: int =
     Replay arrival order then mirrors event time — the realistic
     production arrival shape — so watermarked consumers don't drop most
     rows as late when the raw source is a randomly-split directory
-    (r12 review finding: the scale harness's 32 random parts advanced
+    (r12 review finding: a replicated corpus's 32 random parts advanced
     the stream-stream join's watermark near the horizon after one file
     and the 64x/128x legs measured mostly the late-drop path; a
     time-split replay has zero drops because a chunk boundary orders
@@ -531,7 +528,7 @@ def view_click_stream_join(
 
     Both sides replay the TIME-ORDERED staging
     (:func:`_stage_time_ordered_replay`), never the raw source reader:
-    a randomly-split multi-part source (the scale harness's shape)
+    a randomly-split multi-part source (a replicated corpus's shape)
     advances the watermark near the horizon after one file and the
     join silently drops most rows as late — a plausible-but-partial
     result, worse than the zero-row symptom the r12 directory fix

@@ -2,13 +2,12 @@
 
 Usage::
 
-    python scripts/dump_plan.py <query> [...] --out plans/r16 --suffix before
+    python scripts/dump_plan.py <query> [...] --sf-dir <fixture dir> --out <dir> --suffix before
 
-Writes ``<out>/<query>_<suffix>.txt`` per query. The plan is captured
-from the same session shape the bench uses (local[$SPARK_GRAFT_CPUS]),
-at $SPARK_GRAFT_SF_DIR (default sf0.1) — plan shape (Exchange count,
-join strategy, PushedFilters/ReadSchema) is what the optimization round
-argues from, so the files are committed as evidence.
+Writes ``<out>/<query>_<suffix>.txt`` per query, from the default
+engine session (local[$SPARK_GRAFT_CPUS]) over the fixture tables in
+``--sf-dir``. Plan shape (Exchange count, join strategy,
+PushedFilters/ReadSchema) is what a plan change argues from.
 """
 
 from __future__ import annotations
@@ -20,13 +19,12 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
-    ap.add_argument("--out", default="plans/r16")
+    ap.add_argument("--sf-dir", required=True)
+    ap.add_argument("--out", required=True)
     ap.add_argument("--suffix", default="before")
     args = ap.parse_args()
 
@@ -38,7 +36,7 @@ def main() -> None:
     queries = all_queries()
     os.makedirs(os.path.join(REPO, args.out), exist_ok=True)
     for name in args.queries:
-        df = queries[name].fn(spark, SF_DIR)
+        df = queries[name].fn(spark, args.sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

@@ -12,7 +12,7 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="engine-tests", cpus=4, shuffle_partitions=4)
+    s = get_spark(app_name="engine-tests", cpus=4)
     yield s
     s.stop()
 

@@ -30,7 +30,7 @@ def load_calls(monkeypatch) -> list[str]:
     calls: list[str] = []
     original = catalog.load
 
-    def counting(spark, sf_dir=catalog.DEFAULT_SF_DIR):
+    def counting(spark, sf_dir):
         calls.append(sf_dir)
         time.sleep(0.2)
         return original(spark, sf_dir)

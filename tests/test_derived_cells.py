@@ -9,7 +9,7 @@ Pins three load-bearing facts:
   the registered knn-family values are bit-identical to every green
   driver row recorded before the policy landed;
 - hierarchical routing engages exactly at ROUTING_MIN_CELLS with
-  isqrt parents — the knob scripts/knn_routing_ab.py proved at 1.76×.
+  isqrt parents — the knob an A/B measured at 1.76×.
 """
 
 from __future__ import annotations
@@ -68,7 +68,7 @@ def test_oracle_replays_the_same_constants():
 
 def _replicated_fixture_dir(tmp_path, factor: int = 17) -> str:
     """sf0.001 with embeddings replicated ``factor``x (disjoint vec_id
-    spaces, same stride as scripts/scale_curve.py) — 8500 vectors, the
+    spaces, 1,000,000 apart) — 8500 vectors, the
     smallest corpus whose derived cell count (66) clears
     ROUTING_MIN_CELLS. Other tables are linked unchanged."""
     import shutil

@@ -31,6 +31,12 @@ One guards the scratch-space owner (``stage.py``):
    reaped at exit, swept when orphaned and refused on a cluster
    master without a shared base.
 
+One guards the single timing tool (``perfbench/`` with BENCHMARK.json):
+
+7. the retired timing stack (``bench.py``, the per-round A/B and scale
+   scripts, their round archives) and the registry ``tags`` that only
+   it read stay gone, and no source or doc cites those deleted files.
+
 These are ALLOWLIST tests, not bans: every existing site was
 adjudicated in the r13 sweep (SURVEY §13); a NEW site fails here until
 it is adjudicated (projected / bounded-keyspace / inside the helper)
@@ -39,6 +45,7 @@ and added to the list. The failure message says what to check.
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -217,3 +224,52 @@ def test_only_the_stage_owner_makes_scratch_dirs():
         "the process root: reaped at exit, swept when orphaned, and "
         "placed on spark.graft.stage.dir on a cluster master."
     )
+
+
+#: Names of the retired timing stack: its entry point, its round
+#: archives, and the module name of each deleted script.
+RETIRED = re.compile(
+    r"\bbench\.py\b|\bbench_spread|\b(?:BENCH|PERF|VERIFY|SCALE|OPTIMIZATION)_r"
+    r"|\bPROBES\.md\b|plans/r1"
+    r"|\b(?:scale_round|isolated_query_ab|knn_routing_ab|quantizer_ab"
+    r"|stateful_batch_ab|codegen_sweep|scale_curve|scale_celled|time_query)\b"
+)
+
+
+def _retired_scope() -> list[str]:
+    """Package, tests (bar this file), scripts, the driver adapter,
+    README and the skills notes."""
+    paths = [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "README.md")]
+    for sub, exts in (
+        ("data_engineer_8_final_project_spark", (".py", ".md")),
+        ("tests", (".py", ".md")),
+        ("scripts", (".py", ".md")),
+        (os.path.join(".claude", "skills"), ("",)),
+    ):
+        for dirpath, _dirs, files in os.walk(os.path.join(ROOT, sub)):
+            paths += [os.path.join(dirpath, f) for f in files if f.endswith(exts)]
+    return [p for p in paths if p != os.path.abspath(__file__)]
+
+
+def test_retired_timing_stack_stays_gone():
+    """Pattern 7: perfbench/ is the one timing tool. No source or doc
+    names the deleted timing scripts or round archives, and no query
+    carries the ``tags`` only the old runner read."""
+    hits = []
+    for p in _retired_scope():
+        for i, line in enumerate(open(p, errors="replace").read().splitlines(), 1):
+            m = RETIRED.search(line)
+            if m:
+                hits.append(f"{os.path.relpath(p, ROOT)}:{i}: {m.group(0)}")
+    assert hits == [], (
+        f"{hits} name the retired timing stack: time with perfbench/run.py, "
+        "and cite a measurement by its number and round, not a deleted file."
+    )
+    tagged = []
+    for rel, src in _py_sources().items():
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Call) and any(k.arg == "tags" for k in node.keywords):
+                fn = node.func
+                if (fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", "")) == "register":
+                    tagged.append(f"{rel}:{node.lineno}")
+    assert tagged == [], f"{tagged} pass tags= to register: queries carry no tags"
