@@ -1426,20 +1426,17 @@ def _knn_cells(sf_dir: str) -> tuple[int, int | None]:
     fixture SF derives < ROUTING_MIN_CELLS cells (pinned by
     tests/test_derived_cells.py). A fixture large enough to engage
     routing would hash-mismatch its oracle, so engagement WARNS loudly
-    with the cause (r9 ADVICE), and ``SPARK_GRAFT_KNN_ROUTING=flat``
-    pins the exact flat argmin for oracle verification at any size."""
+    with the cause (r9 ADVICE) and names the routing-aware oracle."""
     n = catalog.parquet_row_count(os.path.join(sf_dir, "embeddings.parquet"))
     nc = similarity.derived_n_cells(n)
     parents = similarity.routing_parents(nc)
-    if parents is not None and os.environ.get("SPARK_GRAFT_KNN_ROUTING") == "flat":
-        return nc, None
     if parents is not None:
         warnings.warn(
             f"knn hierarchical routing engaged ({nc} cells >= "
             f"{similarity.ROUTING_MIN_CELLS}) for {sf_dir}: assignments are "
             "routing-approximate, so a strict-hash comparison against the "
-            "flat-argmin oracle may diverge. Set SPARK_GRAFT_KNN_ROUTING="
-            "flat to pin the exact flat assignment for oracle verification.",
+            "flat-argmin oracle may diverge. Verify against "
+            "_knn_graph_routing_oracle, which replays the two-level assignment.",
             stacklevel=2,
         )
     return nc, parents

@@ -87,9 +87,7 @@ def q_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-USER GroupState scales with the corpus — size the state width
     width = ev.state_width_for(src)
-    # spilled drain: update-mode emissions = users x batches — corpus-
-    # scaling (r12 memory-sink liability sweep)
-    sink = ev.run_available_now_spilled(stream, output_mode="update", state_partitions=width)
+    sink = ev.run_available_now(stream, "update", state_partitions=width)
     return stateful.finalize_totals(sink).orderBy("user_id")
 
 
@@ -138,7 +136,7 @@ def q_standings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema(LINEITEM).option("maxFilesPerTrigger", 1).parquet(chunked)
     )
     m = matches(li_stream, t["orders"], t["customer"], t["supplier"], t["nation"])
-    sink = ev.run_available_now(pair_rollup(m), output_mode="update")
+    sink = ev.run_available_now(pair_rollup(m), "update")
 
     last = Window.partitionBy("home_key", "away_key").orderBy(F.desc("n"))
     final_pairs = (
@@ -223,7 +221,7 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_events_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.sliding_window_agg(ev.read_events_stream(spark, sf_dir))
-    return ev.run_available_now(agg).orderBy("window_start", "event_type")
+    return ev.run_available_now(agg, "complete").orderBy("window_start", "event_type")
 
 
 @register(
@@ -670,7 +668,7 @@ def user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         width = ev.state_width_for(os.path.join(sf_dir, "events.parquet"))
-        sink = ev.run_available_now_spilled(stream, output_mode="update", state_partitions=width)
+        sink = ev.run_available_now(stream, "update", state_partitions=width)
     finally:
         if saved:
             spark.conf.set(key, saved)
@@ -1066,10 +1064,9 @@ def q_event_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-USER GroupState scales with the keyspace — size the state
     # width from source volume (ev.state_width_for documents the cost
     # law; the r6 scale run's 64x wall was 8-wide-bound at 29.6x).
-    # spilled drain: update-mode emissions scale with users x batches
-    sink = ev.run_available_now_spilled(
+    sink = ev.run_available_now(
         stateful.user_funnel_stream(events),
-        output_mode="update",
+        "update",
         state_partitions=ev.state_width_for(src),
     )
     return stateful.finalize_funnel(sink).orderBy("user_id")

@@ -354,10 +354,7 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(chunked)
     )
     deduped = doc_stream.select(text.fingerprint("text").alias("fp")).dropDuplicates(["fp"])
-    # spilled drain: output is one row per DISTINCT key, which scales
-    # with the corpus — same driver-heap liability class as
-    # dedup_stream_watermarked (r12: 128x memory-sink OOM)
-    return ev.run_available_now_spilled(deduped).orderBy("fp")
+    return ev.run_available_now(deduped, "append").orderBy("fp")
 
 
 @register(

@@ -23,16 +23,12 @@ broker.
 
 from __future__ import annotations
 
-import functools
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import EVENT_PROPS, EVENTS
 from ..stage import replay, scratch
-
-_sink_ids = itertools.count()
 
 
 def read_events_stream(
@@ -234,10 +230,9 @@ def session_window_stream(
     # corpora multiply state rows, and the fixed width-8 that is right
     # at sf0.1 serializes per-store work at scale — measured 563 s at
     # 128x (10.5x wall for 2x data over 64x) before this sizing, r11.
-    # spilled drain: one output row per SESSION — corpus-scaling (r12
-    # memory-sink liability sweep)
-    out = run_available_now_spilled(
+    out = run_available_now(
         session_window_agg(events, gap),
+        "append",
         state_partitions=state_width_for(src),
     )
     return out.filter(F.col("user_id") >= 0)  # drop the sentinel's own session
@@ -298,16 +293,27 @@ def state_width_for(src: str) -> int:
 
 
 def run_available_now(
-    agg: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int | None = 8,
+    stream_df: DataFrame,
+    output_mode: str,
+    state_partitions: int = 8,
     progress_out: list | None = None,
 ) -> DataFrame:
-    """Drive a streaming aggregation to completion; return the batch result.
+    """Drive a stream to completion; return what it emitted as a batch frame.
 
     ``availableNow`` processes every pending file then terminates —
-    deterministic replay, no wall clock. The memory sink holds the
-    final state; a fresh sink name per call keeps reruns independent.
+    deterministic replay, no wall clock. Each micro-batch lands in a
+    scratch parquet sink through :func:`stream_to_parquet_exactly_once`,
+    so emitted rows never accumulate in one JVM (r12 finding: a driver-
+    heap sink held the ~14M rows of the 128x dedup_stream_watermarked
+    leg and OOMed the 8g driver); this is also the only shape that works
+    on a real cluster. The read-back follows ``output_mode``:
+
+    - ``append`` / ``update``: every epoch, so each batch's emitted rows
+      appear once (update-mode emissions are appended, not compacted —
+      callers keep the last emission per key);
+    - ``complete``: only the highest ``_epoch=`` partition, found by a
+      directory listing — every epoch holds the whole result table and
+      the last one is final.
 
     ``state_partitions`` sizes the stream's shuffle width, which for a
     stateful query is the number of state stores touched EVERY
@@ -318,117 +324,52 @@ def run_available_now(
     -> 2.7 s on the session stream at sf0.1). A 100 TB keyspace raises
     it; it must stay FIXED across restarts of one checkpoint (state
     store count is pinned at first start), which availableNow replays
-    with fresh checkpoints never hit. ``None`` leaves the session
-    setting untouched.
+    with fresh checkpoints never hit. The width is pinned on the
+    session conf for the run and restored after.
 
     ``progress_out`` (observability): when a list is passed, every
     StreamingQueryProgress dict from the finished run is appended to
     it — the production signals (numRowsDroppedByWatermark, state-rows
     counts, per-batch durations) a replay otherwise discards.
-    """
-    spark = agg.sparkSession
-    name = f"stream_sink_{next(_sink_ids)}"
-    _drive_available_now(
-        spark,
-        lambda: (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        ),
-        state_partitions,
-        progress_out,
-    )
-    # copy the sink out (lineage-free) and drop the memory table — each
-    # sink holds its full result in executor memory, and leaving every
-    # run's table registered leaks storage across a long session
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
-
-
-def _drive_available_now(spark, start, state_partitions, progress_out) -> None:
-    """Shared drive scaffolding for both drains (review r12: the two
-    siblings duplicated it verbatim and had already drifted): pin the
-    state-shuffle width, start via ``start()``, drain to completion,
-    surface StreamingQueryProgress, restore the session conf."""
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    if state_partitions:
-        spark.conf.set(key, str(state_partitions))
-    try:
-        q = start()
-        q.awaitTermination()
-        if progress_out is not None:
-            import json as _json
-
-            progress_out.extend(_json.loads(p.json) for p in q.recentProgress)
-    finally:
-        if state_partitions:
-            spark.conf.set(key, saved)
-
-
-def run_available_now_spilled(
-    stream_df: DataFrame,
-    output_mode: str = "append",
-    state_partitions: int | None = 8,
-    progress_out: list | None = None,
-) -> DataFrame:
-    """Row-level drain for streaming outputs that scale WITH the corpus.
-
-    The memory sink holds every emitted row on the driver heap, which
-    is right for bounded aggregates but caps row-per-input drains at
-    roughly the heap size (r12 finding: the 128x dedup_stream_
-    watermarked leg emitted ~14M rows and OOMed the 8g driver). This
-    variant lands each micro-batch in a temp parquet sink via
-    foreachBatch (``_epoch``-partitioned dynamic overwrite — the
-    exactly-once pattern of :func:`stream_to_parquet_exactly_once`) and
-    returns the batch read-back: emitted rows never accumulate in one
-    JVM, which is also the only shape that works on a real cluster.
-    Append and update modes both land each batch's emitted rows once —
-    the same multiset the memory sink would hold (the memory sink also
-    APPENDS update-mode emissions, it does not compact them).
 
     The spill root is reclaimed EAGERLY: the read-back is
     ``localCheckpoint(eager=True)``-ed (lineage-free, block-manager
-    storage with disk spill — the same shape the memory-sink twin
-    returns) and the temp dir is removed before returning, so a long
-    session running many corpus-scaling drains does not accumulate
-    gigabytes under /tmp (ADVICE r12 #1 — the disk analogue of the
-    driver-heap leak this drain exists to avoid). The checkpoint
+    storage with disk spill) and the scratch dir is removed before
+    returning, so a long session running many drains does not
+    accumulate gigabytes of scratch disk (ADVICE r12 #1). The checkpoint
     blocks are not reaped here: each drain's blocks, bounded by its
-    emitted-row set, stay in the block manager at most until the
-    session ends.
+    read-back rows, stay in the block manager at most until the session
+    ends. A stream that emits nothing returns an empty frame with the
+    stream's schema (a bare read of a file-less dir would raise
+    'Unable to infer schema').
     """
-    import glob as _glob
+    import glob
+    import json
     import os
     import shutil
 
     spark = stream_df.sparkSession
     root = scratch(spark, "drain")
     out_dir = os.path.join(root, "out")
-    schema = stream_df.schema  # captured for the zero-row read-back
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
     try:
-        _drive_available_now(
-            spark,
-            lambda: (
-                stream_df.writeStream.outputMode(output_mode)
-                .foreachBatch(functools.partial(_write_epoch, out_dir))
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            ),
-            state_partitions,
-            progress_out,
-        )
-        # Zero emitted rows overall -> no parquet files land (an empty
-        # batch writes only _SUCCESS) and a bare read would raise
-        # 'Unable to infer schema'; return an empty frame with the
-        # stream's schema instead, matching the memory sink's graceful
-        # empty result (review r12).
-        if not _glob.glob(os.path.join(out_dir, "_epoch=*", "*.parquet")):
-            return spark.createDataFrame([], schema)
+        spark.conf.set(key, str(state_partitions))
+        try:
+            q = stream_to_parquet_exactly_once(
+                stream_df, out_dir, os.path.join(root, "ckpt"), output_mode
+            )
+        finally:
+            spark.conf.set(key, saved)
+        if progress_out is not None:
+            progress_out.extend(json.loads(p.json) for p in q.recentProgress)
+        parts = glob.glob(os.path.join(out_dir, "_epoch=*", "*.parquet"))
+        epochs = {os.path.dirname(p) for p in parts}
+        if not epochs:
+            return spark.createDataFrame([], stream_df.schema)
+        if output_mode == "complete":
+            last = max(epochs, key=lambda d: int(d.rsplit("=", 1)[1]))
+            return spark.read.parquet(last).localCheckpoint(eager=True)
         return spark.read.parquet(out_dir).drop("_epoch").localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -437,40 +378,42 @@ def run_available_now_spilled(
 def streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end: stream replay → windowed agg → final table."""
     agg = hourly_window_agg(read_events_stream(spark, sf_dir))
-    return run_available_now(agg).orderBy("window_start", "event_type")
-
-
-def _write_epoch(path: str, df: DataFrame, epoch_id: int) -> None:
-    """foreachBatch body of both parquet sinks (see
-    :func:`stream_to_parquet_exactly_once`)."""
-    (
-        df.withColumn("_epoch", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .partitionBy("_epoch")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
+    return run_available_now(agg, "complete").orderBy("window_start", "event_type")
 
 
 def stream_to_parquet_exactly_once(
-    stream_df: DataFrame, path: str, checkpoint_dir: str
-) -> None:
+    stream_df: DataFrame, path: str, checkpoint_dir: str, output_mode: str = "append"
+) -> StreamingQuery:
     """foreachBatch parquet sink with replay-safe (exactly-once) writes.
 
     Each micro-batch lands in its own ``_epoch=<id>`` partition with
     dynamic partition overwrite, so a batch replayed after a crash
     overwrites its own partition instead of appending duplicates; the
-    checkpoint tracks which source files each epoch consumed. This is
-    the durable-sink counterpart of the memory sink used by tests —
-    same pipeline, exactly-once into the lake.
+    checkpoint tracks which source files each epoch consumed. Runs with
+    ``availableNow`` and returns the terminated query, whose
+    ``recentProgress`` stays readable. Pointed at a lake path this is
+    the durable sink; :func:`run_available_now` drains through it into
+    scratch space.
     """
+
+    def land(df: DataFrame, epoch_id: int) -> None:
+        (
+            df.withColumn("_epoch", F.lit(epoch_id))
+            .write.mode("overwrite")
+            .partitionBy("_epoch")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(path)
+        )
+
     q = (
-        stream_df.writeStream.foreachBatch(functools.partial(_write_epoch, path))
+        stream_df.writeStream.outputMode(output_mode)
+        .foreachBatch(land)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    return q
 
 
 def _stage_time_ordered_replay(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
@@ -564,10 +507,7 @@ def view_click_stream_join(
     import os as _os
 
     width = state_width_for(_os.path.join(sf_dir, "events.parquet"))
-    # spilled drain: one output row per JOIN MATCH — corpus-scaling
-    return run_available_now_spilled(
-        joined, state_partitions=width
-    ).select(
+    return run_available_now(joined, "append", state_partitions=width).select(
         "v_event_id", "c_event_id", F.col("v_user").alias("user_id"), "v_ts", "c_ts"
     )
 
@@ -597,7 +537,7 @@ def segment_enriched_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
     )
-    return run_available_now(agg, output_mode="complete")
+    return run_available_now(agg, "complete")
 
 
 def _stage_wmdrop_replay(spark: SparkSession, sf_dir: str) -> str:
@@ -709,7 +649,7 @@ def watermark_drop_audit(
         .agg(F.count(F.lit(1)).alias("n_on_time"))
         .select(F.col("w.start").alias("window_start"), "n_on_time")
     )
-    on_time = run_available_now(agg, output_mode="append", progress_out=progress_out)
+    on_time = run_available_now(agg, "append", progress_out=progress_out)
     observed = (
         spark.read.schema(EVENTS)
         .parquet(stage)
@@ -856,12 +796,9 @@ def dedup_stream_watermarked(
     # Keyspace scales with the corpus (one state row per live event_id)
     # → width sized by the state-width law, like the other per-key
     # stateful streams.
-    # spilled drain, not the memory sink: this stream emits one row per
-    # INPUT, so the drained volume scales with the corpus (the 128x leg
-    # OOMed the driver before this; bounded-aggregate streams keep the
-    # memory sink)
-    emitted = run_available_now_spilled(
+    emitted = run_available_now(
         stream.select("event_id", "ts"),
+        "append",
         state_partitions=state_width_for(src),
         progress_out=progress_out,
     )

@@ -102,7 +102,7 @@ def _replicated_fixture_dir(tmp_path, factor: int = 17) -> str:
     return str(d)
 
 
-def test_routing_arm_at_engaged_scale_flat_pin_and_recall(spark, tmp_path, monkeypatch):
+def test_routing_arm_at_engaged_scale_flat_pin_and_recall(spark, tmp_path):
     """VERDICT r10 item 4 / ADVICE: the hierarchical-routing arm gets
     correctness evidence at the scale where it actually engages
     (derived cells >= ROUTING_MIN_CELLS), not just wall-clock.
@@ -110,11 +110,12 @@ def test_routing_arm_at_engaged_scale_flat_pin_and_recall(spark, tmp_path, monke
     On an 8500-vector corpus (17x-replicated sf0.001 embeddings,
     66 derived cells, 8 parents):
 
-    - ``_knn_cells`` WARNS about routing-approximate assignments and
-      returns the routing shape (queries/extended.py warning branch);
-    - with ``SPARK_GRAFT_KNN_ROUTING=flat`` the registered knn_graph
-      query pins the exact flat argmin and strict-hash-matches its
-      DuckDB oracle — the driver contract holds at engaged scale;
+    - ``_knn_cells`` WARNS about routing-approximate assignments,
+      names the routing-aware oracle and returns the routing shape
+      (queries/extended.py warning branch);
+    - the flat arm (``knn_graph`` at the same 66 cells with
+      ``n_parents=None``) strict-hash-matches the flat-argmin DuckDB
+      oracle — the flat assignment holds at engaged scale;
     - the routing arm's edge set agrees with flat at >= 0.95 recall
       (measured 1.0 on this fixture: replicas of the weakly-clustered
       sf0.001 vectors route to the same leaves; the adversarial
@@ -122,34 +123,29 @@ def test_routing_arm_at_engaged_scale_flat_pin_and_recall(spark, tmp_path, monke
       test_extended_ops.test_knn_graph_two_level_routing_matches_flat
       _on_separated_cells).
     """
-    import pytest as _pytest
-
     from data_engineer_8_final_project_spark import catalog, parity
     from data_engineer_8_final_project_spark.queries.extended import (
         _knn_cells,
         _knn_graph_oracle,
-        q_knn_graph,
     )
 
     d = _replicated_fixture_dir(tmp_path)
 
-    monkeypatch.delenv("SPARK_GRAFT_KNN_ROUTING", raising=False)
-    with _pytest.warns(UserWarning, match="hierarchical routing engaged"):
+    with pytest.warns(
+        UserWarning, match="hierarchical routing engaged.*_knn_graph_routing_oracle"
+    ):
         nc, npar = _knn_cells(d)
     assert nc == 66 and npar == 8  # engagement, isqrt parents
 
-    # Flat pin: the registered query end-to-end, strict driver contract.
-    monkeypatch.setenv("SPARK_GRAFT_KNN_ROUTING", "flat")
-    assert _knn_cells(d) == (66, None)
-    flat_pd = q_knn_graph(spark, d).toPandas()
+    # Flat pin: the flat argmin at the engaged cell count, strict hash.
+    emb = catalog.load_table(spark, d, "embeddings")
+    flat_pd = similarity.knn_graph(emb, n_cells=66, k=3, n_parents=None).toPandas()
     odf = parity.run_oracle(d, _knn_graph_oracle(k=3))
     assert len(flat_pd) == len(odf) == 3 * 8500
     assert sorted(flat_pd.columns) == sorted(odf.columns)
     assert parity._strict_hash(flat_pd) == parity._strict_hash(odf)
 
     # Routing arm: same corpus, engaged shape, edge recall vs flat.
-    monkeypatch.delenv("SPARK_GRAFT_KNN_ROUTING")
-    emb = catalog.load_table(spark, d, "embeddings")
     two = similarity.knn_graph(emb, n_cells=nc, k=3, n_parents=npar).toPandas()
     fe = set(map(tuple, flat_pd[["src", "dst"]].values.tolist()))
     te = set(map(tuple, two[["src", "dst"]].values.tolist()))
@@ -157,7 +153,7 @@ def test_routing_arm_at_engaged_scale_flat_pin_and_recall(spark, tmp_path, monke
     assert recall >= 0.95, f"routing-arm edge recall {recall:.3f} < 0.95"
 
 
-def test_routing_arm_strict_hashes_routing_aware_oracle(spark, tmp_path, monkeypatch):
+def test_routing_arm_strict_hashes_routing_aware_oracle(spark, tmp_path):
     """VERDICT r11 item 5: hash-level evidence on the SHIPPED routing
     plan, closing the last routing-arm gap (r10 ADVICE called it
     'permanent by construction'; it is not — the parents are seeded
@@ -165,8 +161,8 @@ def test_routing_arm_strict_hashes_routing_aware_oracle(spark, tmp_path, monkeyp
     assignment is SQL-replayable).
 
     At engaged scale (8500 vectors → 66 derived cells, 8 parents), the
-    registered knn_graph query runs its production routing arm (env
-    unset) and must strict-hash-match a DuckDB oracle that replays the
+    registered knn_graph query runs its production routing arm and
+    must strict-hash-match a DuckDB oracle that replays the
     hierarchical assignment bit-exactly: leaf→parent grouping and the
     level-1/level-2 argmins on the same reduced -2·dot+c2 score with
     the engine's tie orders (parent tie → lower pid, leaf tie → lower
@@ -182,7 +178,6 @@ def test_routing_arm_strict_hashes_routing_aware_oracle(spark, tmp_path, monkeyp
     )
 
     d = _replicated_fixture_dir(tmp_path)
-    monkeypatch.delenv("SPARK_GRAFT_KNN_ROUTING", raising=False)
     with _warnings.catch_warnings():
         _warnings.simplefilter("ignore", UserWarning)  # engagement warning, expected
         assert _knn_cells(d)[1] == 8  # routing genuinely engaged
@@ -194,7 +189,7 @@ def test_routing_arm_strict_hashes_routing_aware_oracle(spark, tmp_path, monkeyp
 
 
 @pytest.mark.slow
-def test_routing_arm_strict_hashes_at_500_cells(spark, tmp_path, monkeypatch):
+def test_routing_arm_strict_hashes_at_500_cells(spark, tmp_path):
     """VERDICT r12 stretch 7: the routing-aware strict-hash pin ran at
     66 cells / 8 parents (the engagement edge); the 128x scale leg
     engages ~2000 derived cells. This second point hash-pins the
@@ -215,7 +210,6 @@ def test_routing_arm_strict_hashes_at_500_cells(spark, tmp_path, monkeypatch):
     )
 
     d = _replicated_fixture_dir(tmp_path, factor=128)  # 64,000 vectors
-    monkeypatch.delenv("SPARK_GRAFT_KNN_ROUTING", raising=False)
     with _warnings.catch_warnings():
         _warnings.simplefilter("ignore", UserWarning)  # engagement warning, expected
         assert _knn_cells(d) == (500, 22)  # deep engagement

@@ -8,9 +8,10 @@ defect found only by a scale leg:
 1. raw ``pathGlobFilter`` stream readers outside ``read_events_stream``
    silently replay ZERO rows on directory-shaped sources (r11 session
    stream; r12 view_click_stream_join + segment_enriched_stream);
-2. memory-sink drains (``run_available_now``) on streams whose output
-   scales with the corpus OOM the driver (r12: the 128x watermarked-
-   dedup leg held ~14M rows on an 8 GiB heap);
+2. the memory sink holds every emitted row on the driver heap (r12:
+   the 128x watermarked-dedup leg held ~14M rows on an 8 GiB heap and
+   OOMed) under a fixed session-wide ``queryName`` — every stream
+   drains through the one spilled drain, ``events.run_available_now``;
 3. ``applyInPandas*`` / ``mapInPandas`` sites that ship unconsumed
    columns across the Arrow boundary pay measured 15-25%% penalties
    (r12: projecting cut user_totals_stateful 381.7 -> 323.8 s at 64x).
@@ -102,31 +103,15 @@ def test_path_glob_filter_readers_stay_inside_the_helper():
     )
 
 
-def test_memory_sink_drains_are_bounded_keyspace_only():
-    """Pattern 2: every ``run_available_now(`` caller was adjudicated
-    bounded-keyspace in the r13 sweep (windowed/complete-mode
-    aggregates or <= nation-pair rollups — output does NOT scale with
-    input rows). Corpus-scaling drains use run_available_now_spilled."""
-    allowed = {
-        # the drain's own definition
-        ("streaming/events.py", "run_available_now"),
-        # hourly/sliding windowed aggs: rows ~ time-span x event types
-        ("streaming/events.py", "streaming_hourly"),
-        ("queries/streaming_q.py", "q_events_sliding_stream"),
-        # complete-mode (segment x type) agg: keyspace <= 5 x 6
-        ("streaming/events.py", "segment_enriched_stream"),
-        # hour-window audit rows ~ time-span
-        ("streaming/events.py", "watermark_drop_audit"),
-        # update-mode pair rollup: <= 25^2 pairs x 4 batches
-        ("queries/streaming_q.py", "q_standings_stream"),
-    }
-    got = _sites(r"run_available_now\(")
-    assert got == allowed, (
-        f"memory-sink drain set changed: {got ^ allowed}. A new caller "
-        "must have a BOUNDED output keyspace (the sink holds every "
-        "emitted row on the driver heap — the r12 128x OOM); corpus-"
-        "scaling streams drain via run_available_now_spilled. Adjudicate "
-        "and update the allowlist either way."
+def test_no_package_module_uses_the_memory_sink():
+    """Pattern 2: no package module starts a memory sink
+    (``.format("memory")``) or names a stream (``.queryName(``); the
+    spilled drain lands each micro-batch in scratch parquet instead."""
+    got = _sites(r"""\.format\(\s*["']memory["']|\.queryName\(""")
+    assert got == set(), (
+        f"memory-sink site(s) {got}: the sink holds every emitted row on "
+        "the driver heap and registers a session-wide temp view — drain "
+        "through events.run_available_now(stream_df, output_mode)."
     )
 
 

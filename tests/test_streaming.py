@@ -693,18 +693,18 @@ def test_spilled_drain_returns_empty_frame_on_zero_emissions(spark, sf_dir):
     """review r12: a stream that emits nothing lands no parquet files,
     and a bare read of the spill dir would raise 'Unable to infer
     schema' — the drain must return an empty frame with the stream's
-    schema, matching the memory sink's graceful empty result."""
+    schema."""
     stream = ev.read_events_stream(spark, sf_dir).filter(
         "event_type = '__no_such_type__'"
     )
-    out = ev.run_available_now_spilled(stream.select("event_id", "ts"))
+    out = ev.run_available_now(stream.select("event_id", "ts"), "append")
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["event_id", "ts"]
 
 
 def test_spilled_drain_reclaims_spill_root_eagerly(spark, sf_dir, monkeypatch):
     """ADVICE r12 #1: the spill root (parquet + checkpoint) must be
-    removed before the drain returns — a long bench/scale session
+    removed before the drain returns — a long session
     running many corpus-scaling drains must not accumulate temp disk
     until process exit. The read-back is localCheckpoint-ed first, so
     the returned frame survives the removal."""
@@ -718,15 +718,16 @@ def test_spilled_drain_reclaims_spill_root_eagerly(spark, sf_dir, monkeypatch):
     # record the spill roots present while each stream runs, so the
     # empty-after checks below cannot pass by looking in the wrong place
     seen = []
-    drive = ev._drive_available_now
+    write = ev.stream_to_parquet_exactly_once
 
     def spy(*args):
-        drive(*args)
+        q = write(*args)
         seen.append(drains())
+        return q
 
-    monkeypatch.setattr(ev, "_drive_available_now", spy)
+    monkeypatch.setattr(ev, "stream_to_parquet_exactly_once", spy)
     stream = ev.read_events_stream(spark, sf_dir).select("event_id", "ts")
-    out = ev.run_available_now_spilled(stream)
+    out = ev.run_available_now(stream, "append")
     assert len(seen) == 1 and len(seen[0]) == 1, f"drain dir not where expected: {seen}"
     assert drains() == [], f"spill roots not reclaimed: {drains()}"
     # the frame is lineage-free: still readable after its files are gone
@@ -734,14 +735,33 @@ def test_spilled_drain_reclaims_spill_root_eagerly(spark, sf_dir, monkeypatch):
     assert n > 0 and out.count() == n
 
     # the zero-emission path reclaims too
-    empty = ev.run_available_now_spilled(
+    empty = ev.run_available_now(
         ev.read_events_stream(spark, sf_dir)
         .filter("event_type = '__no_such_type__'")
-        .select("event_id", "ts")
+        .select("event_id", "ts"),
+        "append",
     )
     assert empty.count() == 0
     assert len(seen) == 2 and len(seen[1]) == 1
     assert drains() == []
+
+
+def test_complete_mode_drain_reads_back_only_the_final_epoch(spark, sf_dir, tmp_path):
+    """Complete mode re-emits the whole result table every micro-batch,
+    so the drain returns the last epoch alone: replay 3 files one per
+    trigger and require exactly the batch counts. Reading every epoch
+    back would repeat each event_type once per batch."""
+    events = catalog.tables(spark, sf_dir)["events"]
+    src = str(tmp_path / "src")
+    events.repartition(3).write.mode("overwrite").parquet(src)
+    stream = spark.readStream.schema(events.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    progress: list = []
+    got = ev.run_available_now(
+        stream.groupBy("event_type").count(), "complete", progress_out=progress
+    )
+    assert len(progress) > 1, progress
+    want = events.groupBy("event_type").count()
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_replay_files_per_trigger_law(sf_dir):
