@@ -1998,8 +1998,11 @@ ORDER BY c_custkey, chain_start
 
 #: the same text with its one table reference as a ``spark.sql``
 #: DataFrame placeholder, bound to the orders frame of the query's own
-#: ``sf_dir`` rather than to whatever session view is named ``orders``
-_ORDER_CHAINS_SPARK_SQL = ORDER_CHAINS_RECURSIVE_SQL.replace("FROM orders\n", "FROM {orders}\n")
+#: ``sf_dir`` rather than to whatever session view is named ``orders``,
+#: and the final read of the recursive CTE capped by a ``{bound}`` LIMIT
+_ORDER_CHAINS_SPARK_SQL = ORDER_CHAINS_RECURSIVE_SQL.replace(
+    "FROM orders\n", "FROM {orders}\n"
+).replace("FROM chain\n", "FROM (SELECT * FROM chain LIMIT {bound}) chain\n")
 
 
 @register(
@@ -2008,35 +2011,26 @@ _ORDER_CHAINS_SPARK_SQL = ORDER_CHAINS_RECURSIVE_SQL.replace("FROM orders\n", "F
     survey_ref="extended: recursive CTE (Spark 4.1 WITH RECURSIVE, acyclic walk)",
 )
 def q_order_chains_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runs ORDER_CHAINS_RECURSIVE_SQL with only its table reference
-    bound to this ``sf_dir``'s orders frame — the oracle IS the
-    query, so the gate proves Spark's recursive-CTE execution agrees
-    with DuckDB's on the same logic, not just that two translations
-    agree. Scale shape: the recursion seeds from anchors (one window
-    pass) and each step is an equi-join on (cust, cur) — depth bounded
-    by the longest chain (3 at fixture scale; bounded by order
-    frequency in any real corpus), rows bounded by total orders.
+    """Runs ORDER_CHAINS_RECURSIVE_SQL with its table reference bound
+    to this ``sf_dir``'s orders frame and a LIMIT on its final CTE read
+    — otherwise the oracle IS the query, so the gate proves Spark's
+    recursive-CTE execution agrees with DuckDB's on the same logic.
+    Scale shape: the recursion seeds from anchors (one window pass) and
+    each step is an equi-join on (cust, cur) — depth bounded by the
+    longest chain (3 at fixture scale; bounded by order frequency in
+    any real corpus), rows bounded by total orders.
 
-    Scale governor: Spark caps accumulated recursion output at
-    ``spark.sql.cteRecursionRowLimit`` (default 1e6) and depth at
-    ``cteRecursionLevelLimit`` (100) — an 8x orders replication
-    already trips the row limit (measured: RECURSION_ROW_LIMIT_EXCEEDED
-    at 1.16M chain rows). Total chain rows are bounded by the orders
-    row count, so the limit is raised monotonically to that bound; it
-    is deliberately NOT restored (the conf is read at EXECUTION time of
-    the returned lazy frame, after this function exits), and a larger
-    governor left on the session is harmless — it gates only recursive
-    CTEs, and only ever widens."""
+    Scale governor: Spark caps an unlimited recursive CTE at the
+    session's ``spark.sql.cteRecursionRowLimit`` (1e6 by default; an 8x
+    orders replication trips it at 1.16M chain rows). The LIMIT on the
+    CTE reference replaces that cap per query. Every order lies on
+    exactly one chain, so chain rows equal orders rows and the LIMIT,
+    twice that, never truncates."""
     t = catalog.tables(spark, sf_dir)
-    key = "spark.sql.cteRecursionRowLimit"
-    # bound: every chain row is a distinct (anchor, order) pair walked
-    # forward, so output rows <= orders rows; double it for headroom.
     # The count comes from parquet footer metadata — a bound, not an
     # answer, must not cost an eager full-table Spark job per call.
     n_orders = catalog.parquet_row_count(os.path.join(sf_dir, "orders.parquet"))
-    current = int(spark.conf.get(key))
-    spark.conf.set(key, str(max(current, 2 * n_orders)))
-    return spark.sql(_ORDER_CHAINS_SPARK_SQL, orders=t["orders"])
+    return spark.sql(_ORDER_CHAINS_SPARK_SQL, orders=t["orders"], bound=2 * n_orders)
 
 
 @register(

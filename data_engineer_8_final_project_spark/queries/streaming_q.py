@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from .. import catalog
 from ..operators.funnel import batch_funnel
 from ..registry import register
+from ..session import with_conf
 from ..stage import replay
 from ..streaming import events as ev
 from .flagship import STANDINGS_ORACLE
@@ -643,37 +644,27 @@ def user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     which runs wherever protobuf exists.
 
     transformWithState only runs on the RocksDB state store provider,
-    so the query pins it for the duration of the stream and restores
-    the session's provider after — per-query state-backend selection,
-    which is exactly how a mixed workload would run it in production.
+    so the stream selects it on its own session clone (the drain's
+    clone inherits it) — per-query state-backend selection, which is
+    exactly how a mixed workload would run it in production.
     """
     from ..streaming import stateful
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        # same replay-batch law as q_user_totals_stateful: the twin is
-        # equally Python-worker-bound per touched key per batch
-        stream = stateful.user_running_totals_tws(
-            ev.read_events_stream(
-                spark,
-                sf_dir,
-                max_files_per_trigger=ev.replay_files_per_trigger(
-                    os.path.join(sf_dir, "events.parquet")
-                ),
-            )
+    # same replay-batch law as q_user_totals_stateful: the twin is
+    # equally Python-worker-bound per touched key per batch
+    stream = stateful.user_running_totals_tws(
+        ev.read_events_stream(
+            spark,
+            sf_dir,
+            max_files_per_trigger=ev.replay_files_per_trigger(
+                os.path.join(sf_dir, "events.parquet")
+            ),
         )
-        width = ev.state_width_for(os.path.join(sf_dir, "events.parquet"))
-        sink = ev.run_available_now(stream, "update", state_partitions=width)
-    finally:
-        if saved:
-            spark.conf.set(key, saved)
-        else:
-            spark.conf.unset(key)
+    )
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    stream = with_conf(stream, {"spark.sql.streaming.stateStore.providerClass": rocksdb})
+    width = ev.state_width_for(os.path.join(sf_dir, "events.parquet"))
+    sink = ev.run_available_now(stream, "update", state_partitions=width)
     return stateful.finalize_totals(sink).orderBy("user_id")
 
 

@@ -12,6 +12,8 @@ Design notes (scale-first):
   DuckDB oracle (DuckDB timestamps are UTC-naive).
 - Arrow enabled for any pandas-interop boundary (the sanctioned slow
   path for non-relational operators).
+- No query changes the session conf; one that needs its own setting
+  runs on a session clone (:func:`with_conf`).
 
 The reference ran Spark 3.3.2 standalone with a 1-core/1 GB worker
 (reference docker/docker-compose-spark.yml:26-27); this engine assumes
@@ -22,7 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
 
@@ -67,3 +69,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def with_conf(df: DataFrame, conf: dict[str, str]) -> DataFrame:
+    """``df`` on a clone of its session with ``conf`` set on the clone
+    only: neither the caller's session nor a concurrent query sees it.
+
+    The clone (``cloneSession``, as Structured Streaming takes one per
+    stream) keeps the session's conf, views, UDFs and SparkContext; a
+    streaming frame's clone also keeps the session's stream listeners,
+    so progress still reaches them.
+    """
+    jsession = df.sparkSession._jsparkSession
+    jclone = jsession.cloneSession()
+    for k, v in conf.items():
+        jclone.conf().set(k, v)
+    if df.isStreaming:
+        for listener in jsession.streams().listListeners():
+            jclone.streams().addListener(listener)
+    jvm = df.sparkSession._jvm
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(jclone, df._jdf.logicalPlan())
+    return DataFrame(jdf, SparkSession(df.sparkSession.sparkContext, jclone))

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import with_conf
+
 #: Bits kept per dimension. 16 bits/dim keeps the interleaved key in a
 #: BIGINT for up to 4 dims and bounds the expression tree (bits × dims
 #: shift/or terms) well inside codegen limits.
@@ -102,11 +104,10 @@ def write_zordered(
     The file count is part of this function's CONTRACT (a compaction
     job sizes files deliberately), so the confs that can re-plan the
     exchange — AQE partition coalescing and the range-sampler's seed
-    input ``spark.sql.shuffle.partitions`` — are pinned for the write
-    and restored after: a long-lived session whose earlier queries
-    retuned those confs must not change this layout.
+    input ``spark.sql.shuffle.partitions`` — are pinned on a session
+    clone for this write alone: confs that earlier queries retuned must
+    not change this layout, and the pins must reach no other query.
     """
-    spark = df.sparkSession
     pins = {
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
         "spark.sql.shuffle.partitions": str(n_files),
@@ -120,18 +121,10 @@ def write_zordered(
         # this write-time cost bounded at any table size.
         "spark.sql.execution.rangeExchange.sampleSizePerPartition": "1000000",
     }
-    saved = {k: spark.conf.get(k) for k in pins}
-    for k, v in pins.items():
-        spark.conf.set(k, v)
-    try:
-        keyed = with_zorder_key(df, cols, bits)
-        (
-            keyed.repartitionByRange(n_files, "_zkey")
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    clustered = (
+        with_zorder_key(df, cols, bits)
+        .repartitionByRange(n_files, "_zkey")
+        .sortWithinPartitions("_zkey")
+        .drop("_zkey")
+    )
+    with_conf(clustered, pins).write.mode("overwrite").parquet(path)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import EVENT_PROPS, EVENTS
+from ..session import with_conf
 from ..stage import replay, scratch
 
 
@@ -306,14 +307,11 @@ def run_available_now(
     so emitted rows never accumulate in one JVM (r12 finding: a driver-
     heap sink held the ~14M rows of the 128x dedup_stream_watermarked
     leg and OOMed the 8g driver); this is also the only shape that works
-    on a real cluster. The read-back follows ``output_mode``:
-
-    - ``append`` / ``update``: every epoch, so each batch's emitted rows
-      appear once (update-mode emissions are appended, not compacted —
-      callers keep the last emission per key);
-    - ``complete``: only the highest ``_epoch=`` partition, found by a
-      directory listing — every epoch holds the whole result table and
-      the last one is final.
+    on a real cluster. The read-back is the whole sink: in ``append`` /
+    ``update`` mode each batch's emitted rows appear once (update-mode
+    emissions are appended, not compacted — callers keep the last
+    emission per key); in ``complete`` mode the sink holds one copy of
+    the result table, the last batch's.
 
     ``state_partitions`` sizes the stream's shuffle width, which for a
     stateful query is the number of state stores touched EVERY
@@ -324,8 +322,8 @@ def run_available_now(
     -> 2.7 s on the session stream at sf0.1). A 100 TB keyspace raises
     it; it must stay FIXED across restarts of one checkpoint (state
     store count is pinned at first start), which availableNow replays
-    with fresh checkpoints never hit. The width is pinned on the
-    session conf for the run and restored after.
+    with fresh checkpoints never hit. The width is set on a clone of
+    the stream's session; the caller's session keeps its own.
 
     ``progress_out`` (observability): when a list is passed, every
     StreamingQueryProgress dict from the finished run is appended to
@@ -351,25 +349,15 @@ def run_available_now(
     spark = stream_df.sparkSession
     root = scratch(spark, "drain")
     out_dir = os.path.join(root, "out")
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
     try:
-        spark.conf.set(key, str(state_partitions))
-        try:
-            q = stream_to_parquet_exactly_once(
-                stream_df, out_dir, os.path.join(root, "ckpt"), output_mode
-            )
-        finally:
-            spark.conf.set(key, saved)
+        width = {"spark.sql.shuffle.partitions": str(state_partitions)}
+        q = stream_to_parquet_exactly_once(
+            with_conf(stream_df, width), out_dir, os.path.join(root, "ckpt"), output_mode
+        )
         if progress_out is not None:
             progress_out.extend(json.loads(p.json) for p in q.recentProgress)
-        parts = glob.glob(os.path.join(out_dir, "_epoch=*", "*.parquet"))
-        epochs = {os.path.dirname(p) for p in parts}
-        if not epochs:
+        if not glob.glob(os.path.join(out_dir, "_epoch=*", "*.parquet")):
             return spark.createDataFrame([], stream_df.schema)
-        if output_mode == "complete":
-            last = max(epochs, key=lambda d: int(d.rsplit("=", 1)[1]))
-            return spark.read.parquet(last).localCheckpoint(eager=True)
         return spark.read.parquet(out_dir).drop("_epoch").localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -389,7 +377,9 @@ def stream_to_parquet_exactly_once(
     Each micro-batch lands in its own ``_epoch=<id>`` partition with
     dynamic partition overwrite, so a batch replayed after a crash
     overwrites its own partition instead of appending duplicates; the
-    checkpoint tracks which source files each epoch consumed. Runs with
+    checkpoint tracks which source files each epoch consumed. A
+    ``complete``-mode batch is the whole result table, so each one
+    replaces ``_epoch=0``: the sink holds one copy. Runs with
     ``availableNow`` and returns the terminated query, whose
     ``recentProgress`` stays readable. Pointed at a lake path this is
     the durable sink; :func:`run_available_now` drains through it into
@@ -398,7 +388,7 @@ def stream_to_parquet_exactly_once(
 
     def land(df: DataFrame, epoch_id: int) -> None:
         (
-            df.withColumn("_epoch", F.lit(epoch_id))
+            df.withColumn("_epoch", F.lit(0 if output_mode == "complete" else epoch_id))
             .write.mode("overwrite")
             .partitionBy("_epoch")
             .option("partitionOverwriteMode", "dynamic")

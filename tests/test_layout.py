@@ -14,6 +14,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from data_engineer_8_final_project_spark.session import with_conf
 from data_engineer_8_final_project_spark.sources import layout
 
 
@@ -72,19 +73,8 @@ def grid_paths(spark, tmp_path_factory):
         "spark.sql.shuffle.partitions": "16",
         "spark.sql.execution.rangeExchange.sampleSizePerPartition": "1000000",
     }
-    saved = {k: spark.conf.get(k) for k in pins}
-    for k, v in pins.items():
-        spark.conf.set(k, v)
-    try:
-        (
-            grid.repartitionByRange(16, "x")
-            .sortWithinPartitions("x")
-            .write.mode("overwrite")
-            .parquet(xpath)
-        )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    xsorted = grid.repartitionByRange(16, "x").sortWithinPartitions("x")
+    with_conf(xsorted, pins).write.mode("overwrite").parquet(xpath)
     return zpath, xpath
 
 

@@ -121,11 +121,13 @@ def test_concurrent_clients_stage_one_replay_once(spark, tmp_path, monkeypatch):
 
 
 def test_concurrent_staging_queries_match_oracles(spark, sf_dir):
-    """Two clients each of dedup_stream and html_matches_extract on one
-    session: the shared replay stages cannot be rewritten under a
-    running stream or a lazy result."""
+    """Two clients each of dedup_stream and html_matches_extract, plus
+    a staged loop (knn_pagerank) and a BI query (pricing_summary), on
+    one session: the shared replay stages cannot be rewritten under a
+    running stream or a lazy result, and no query's settings reach the
+    others — the session's width is the same after the run."""
     key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)  # the drains flip it session-wide
+    width = spark.conf.get(key)
     results = {}
 
     def run(i: int, name: str) -> None:
@@ -134,18 +136,23 @@ def test_concurrent_staging_queries_match_oracles(spark, sf_dir):
         except Exception as e:  # surfaced by the assert below
             results[i] = e
 
-    names = ["dedup_stream", "dedup_stream", "html_matches_extract", "html_matches_extract"]
+    names = [
+        "dedup_stream",
+        "dedup_stream",
+        "html_matches_extract",
+        "html_matches_extract",
+        "knn_pagerank",
+        "pricing_summary",
+    ]
     threads = [threading.Thread(target=run, args=(i, n)) for i, n in enumerate(names)]
-    try:
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-    finally:
-        spark.conf.set(key, saved)
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
     for i, name in enumerate(names):
         res = results[i]
         assert not isinstance(res, Exception) and res.ok, f"{name}: {res}"
+    assert spark.conf.get(key) == width
 
 
 def test_wmdrop_stager_rejects_short_span_fixture(spark, tmp_path):

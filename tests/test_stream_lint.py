@@ -38,6 +38,14 @@ One guards the single timing tool (``perfbench/`` with BENCHMARK.json):
    scripts, their round archives) and the registry ``tags`` that only
    it read stay gone, and no source or doc cites those deleted files.
 
+One guards the session conf, which every concurrent query shares:
+
+8. a query that sets (or unsets) a session conf as its own control
+   channel leaks that value into every query running beside it, and
+   two such queries interleave their save/restore and leave the
+   session at the wrong value — a per-query setting goes on a session
+   clone (``session.with_conf``) or into the plan.
+
 These are ALLOWLIST tests, not bans: every existing site was
 adjudicated in the r13 sweep (SURVEY §13); a NEW site fails here until
 it is adjudicated (projected / bounded-keyspace / inside the helper)
@@ -258,3 +266,26 @@ def test_retired_timing_stack_stays_gone():
                 if (fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", "")) == "register":
                     tagged.append(f"{rel}:{node.lineno}")
     assert tagged == [], f"{tagged} pass tags= to register: queries carry no tags"
+
+
+def test_no_package_module_mutates_the_session_conf():
+    """Pattern 8: no package module calls ``<x>.conf.set(`` or
+    ``<x>.conf.unset(``. ``session.with_conf`` gets no exemption: it
+    sets its clone through the JVM handle (``jclone.conf().set``), a
+    different call shape that cannot reach the caller's session."""
+    hits = []
+    for rel, src in _py_sources().items():
+        for node in ast.walk(ast.parse(src)):
+            fn = node.func if isinstance(node, ast.Call) else None
+            if (
+                isinstance(fn, ast.Attribute)
+                and fn.attr in ("set", "unset")
+                and isinstance(fn.value, ast.Attribute)
+                and fn.value.attr == "conf"
+            ):
+                hits.append(f"{rel}:{node.lineno}")
+    assert hits == [], (
+        f"{hits} mutate a session conf: every concurrent query on the "
+        "session sees it. Set a per-query value on a clone "
+        "(session.with_conf(df, conf)) or express it in the plan."
+    )

@@ -746,11 +746,25 @@ def test_spilled_drain_reclaims_spill_root_eagerly(spark, sf_dir, monkeypatch):
     assert drains() == []
 
 
-def test_complete_mode_drain_reads_back_only_the_final_epoch(spark, sf_dir, tmp_path):
+def test_complete_mode_drain_reads_back_only_the_final_epoch(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Complete mode re-emits the whole result table every micro-batch,
-    so the drain returns the last epoch alone: replay 3 files one per
-    trigger and require exactly the batch counts. Reading every epoch
-    back would repeat each event_type once per batch."""
+    so the sink keeps one copy: replay 3 files one per trigger, require
+    exactly the batch counts back, and exactly one ``_epoch=`` dir in
+    the sink after the run. Reading every batch's copy back would
+    repeat each event_type once per batch."""
+    import glob
+
+    epochs = []
+    write = ev.stream_to_parquet_exactly_once
+
+    def spy(*args):
+        q = write(*args)
+        epochs.append(glob.glob(os.path.join(args[1], "_epoch=*")))
+        return q
+
+    monkeypatch.setattr(ev, "stream_to_parquet_exactly_once", spy)
     events = catalog.tables(spark, sf_dir)["events"]
     src = str(tmp_path / "src")
     events.repartition(3).write.mode("overwrite").parquet(src)
@@ -760,8 +774,80 @@ def test_complete_mode_drain_reads_back_only_the_final_epoch(spark, sf_dir, tmp_
         stream.groupBy("event_type").count(), "complete", progress_out=progress
     )
     assert len(progress) > 1, progress
+    assert len(epochs) == 1 and len(epochs[0]) == 1, f"one result copy expected: {epochs}"
     want = events.groupBy("event_type").count()
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_drain_sets_the_state_width_on_the_stream_not_the_session(
+    spark, sf_dir, monkeypatch
+):
+    """The drain's state width reaches the stream's own session and its
+    state operators, while the caller's session keeps its width for
+    the whole run: a concurrent query on the session never sees it."""
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    state_partitions = 3
+    assert width != str(state_partitions)
+    seen = []
+    write = ev.stream_to_parquet_exactly_once
+
+    def spy(stream_df, *args):
+        seen.append((spark.conf.get(key), stream_df.sparkSession.conf.get(key)))
+        return write(stream_df, *args)
+
+    monkeypatch.setattr(ev, "stream_to_parquet_exactly_once", spy)
+    progress: list = []
+    out = ev.run_available_now(
+        ev.read_events_stream(spark, sf_dir).groupBy("event_type").count(),
+        "complete",
+        state_partitions=state_partitions,
+        progress_out=progress,
+    )
+    assert out.count() > 0
+    assert seen == [(width, str(state_partitions))], seen
+    ops = [op["numShufflePartitions"] for p in progress for op in p["stateOperators"]]
+    assert ops and set(ops) == {state_partitions}, ops
+    assert spark.conf.get(key) == width
+
+
+def test_drain_progress_reaches_the_callers_stream_listeners(spark, sf_dir):
+    """The drain runs its stream on a session clone; a streaming
+    listener on the caller's session must still see every micro-batch
+    of it (observability of a query does not depend on where its
+    width was set)."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Probe(StreamingQueryListener):
+        def __init__(self):
+            self.ids = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.ids.append(str(event.progress.id))
+
+        def onQueryTerminated(self, event):
+            pass
+
+    probe = Probe()
+    spark.streams.addListener(probe)
+    try:
+        progress: list = []
+        ev.run_available_now(
+            ev.read_events_stream(spark, sf_dir).groupBy("event_type").count(),
+            "complete",
+            progress_out=progress,
+        )
+        deadline = time.time() + 30  # the listener bus delivers asynchronously
+        while len(probe.ids) < len(progress) and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(probe)
+    assert progress and probe.ids == [str(p["id"]) for p in progress], (probe.ids, progress)
 
 
 def test_replay_files_per_trigger_law(sf_dir):
