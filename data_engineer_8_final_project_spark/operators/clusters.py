@@ -13,16 +13,65 @@ Scale shape: each round is one join edges⋈labels + one min-aggregation
 — all key-partitioned shuffles, no driver data; rounds needed = graph
 diameter (near-dup components are overwhelmingly tiny cliques, so 2–3
 rounds in practice; the loop caps at ``max_iters`` and checks
-convergence with a single scalar aggregate per round). For planet-scale
-graphs swap the loop body for the large-star/small-star variant — same
-interface.
+convergence with a scalar probe observed on the generation's own job).
+For planet-scale graphs swap the loop body for the large-star/small-star
+variant — same interface.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from ..stage import release, stage_frame
+
+
+def _stage(df: DataFrame, probe: Sequence[Column]) -> tuple[DataFrame, tuple]:
+    """Stage ``df`` → (staged frame, ``probe`` observed by the staging job)."""
+    if not probe:
+        return stage_frame(df), ()
+    obs = Observation()
+    staged = stage_frame(df.observe(obs, *probe))
+    return staged, tuple(obs.get.values())
+
+
+def iterate(
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_iters: int,
+    probe: Sequence[Column] = (),
+    done: Callable[[tuple | None, tuple], bool] = lambda prev, cur: prev == cur,
+) -> DataFrame:
+    """The one fixed-point loop driver: stage ``init``, then ``step(prev)``
+    up to ``max_iters`` times, releasing each superseded generation once
+    its successor is staged; return the last generation. ``probe``
+    (aggregate Columns) is observed on each generation by its staging
+    job; with a probe the loop stops once ``done(previous, this)``
+    holds (``previous`` is None for ``init``; default: the tuple repeated).
+
+    Retry safety: the observe node is the last operator before the sink,
+    so no Exchange sits above it and it runs in the result stage, whose
+    accumulator updates the DAGScheduler applies once per partition — a
+    retried task cannot double-count a probe into a wrong stop.
+    """
+    gen, seen = _stage(init, probe)
+    prev = None
+    for _ in range(max_iters):
+        if probe and done(prev, seen):
+            break
+        new, cur = _stage(step(gen), probe)
+        release(gen)
+        gen, prev, seen = new, seen, cur
+    return gen
+
+
+def _hand_back(out: DataFrame, *spent: DataFrame) -> DataFrame:
+    """Stage a loop's result, then release the stages it was built from."""
+    staged = stage_frame(out)
+    for frame in spent:
+        release(frame)
+    return staged
 
 
 def connected_components(
@@ -41,24 +90,25 @@ def connected_components(
     # semantics silently.
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
-    # undirected: propagate both ways. Persist — the edge list joins
+    # undirected: propagate both ways. Stage — the edge list joins
     # against labels EVERY round; without it each iteration recomputes
     # the (expensive) upstream pair-finding lineage from scratch.
     fwd = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    both_cached = fwd.unionByName(
-        edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).persist()
+    both, (n_edges,) = _stage(
+        fwd.unionByName(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))),
+        [F.count(F.lit(1))],
+    )
     # Right-size the loop frames: the near-dup edge list is usually far
     # smaller than the corpus, and per-round task overhead at the
     # session's full shuffle width dominates the tiny joins (AQE cannot
-    # coalesce under the persisted frames here). ~100k edges per
+    # coalesce the scan tasks of a staged frame). ~100k edges per
     # partition, never above the session's shuffle width — so a truly
-    # large graph keeps full parallelism. The count also materializes
-    # the persist, so round 1 never recomputes the edge lineage.
+    # large graph keeps full parallelism. The count is observed on the
+    # staging job.
     spark = vertices.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    parts = max(1, min(width, both_cached.count() // 100_000 + 1))
-    both = both_cached.coalesce(parts)
+    parts = max(1, min(width, n_edges // 100_000 + 1))
+    loop_edges = both.coalesce(parts)
     # r16: iterate ONLY over vertices that have at least one edge. A
     # singleton never receives a message and never emits one, so its
     # label is constant (= its own id) through every round — carrying
@@ -73,49 +123,38 @@ def connected_components(
     # which is one dst-keyed aggregation over the undirected edge list
     # — no separate touched-distinct exchange, no identity-label init
     # frame, no round-1 union+groupBy pass.
-    labels = (
-        both.groupBy(F.col("dst").alias("doc_id"))
+    round1 = (
+        loop_edges.groupBy(F.col("dst").alias("doc_id"))
         .agg(F.min("src").alias("_mn"))
         .select("doc_id", F.least(F.col("doc_id"), F.col("_mn")).alias("cluster_id"))
         .coalesce(parts)
-        .persist()
     )
-    # convergence probe: the label sum strictly decreases until the
-    # fixpoint (min-propagation is monotone) — one scalar per round,
-    # and persisting each generation keeps the lineage flat so round k
-    # never recomputes rounds 1..k-1. (On an empty edge set the sum is
-    # NULL both rounds, which terminates the loop on round 1 — right.)
-    old_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-    for _ in range(max_iters - 1):  # round 1 is the fused init above
+
+    def step(labels: DataFrame) -> DataFrame:
         msgs = (
-            both.join(labels, both.src == labels.doc_id)
+            loop_edges.join(labels, loop_edges.src == labels.doc_id)
             .select(F.col("dst").alias("doc_id"), "cluster_id")
         )
-        new_labels = (
+        return (
             labels.unionByName(msgs)
             .groupBy("doc_id")
             .agg(F.min("cluster_id").alias("cluster_id"))
-            .persist()
         )
-        new_sum = new_labels.agg(F.sum("cluster_id")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if new_sum == old_sum:
-            break
-        old_sum = new_sum
-    both_cached.unpersist()
+
+    # convergence probe: the label sum strictly decreases until the
+    # fixpoint (min-propagation is monotone) — one scalar per round,
+    # and staging each generation keeps the lineage flat so round k
+    # never recomputes rounds 1..k-1. (On an empty edge set the sum is
+    # NULL both rounds, which terminates the loop on round 1 — right.)
+    labels = iterate(round1, step, max_iters - 1, probe=[F.sum("cluster_id")])
     # Singletons label themselves; touched vertices take the loop
-    # fixpoint. Hand back a lineage-free copy and release the loop
-    # cache — the persisted generations would otherwise pin executor
-    # storage for the life of the session (localCheckpoint blocks are
-    # freed by GC).
-    out = (
+    # fixpoint. Hand back a lineage-free copy.
+    return _hand_back(
         vertices.join(labels.withColumnRenamed("cluster_id", "_cc"), "doc_id", "left")
-        .select("doc_id", F.coalesce("_cc", F.col("doc_id")).alias("cluster_id"))
-        .transform(stage_frame)
+        .select("doc_id", F.coalesce("_cc", F.col("doc_id")).alias("cluster_id")),
+        labels,
+        both,
     )
-    labels.unpersist()
-    return out
 
 
 def connected_components_twostar(
@@ -140,23 +179,19 @@ def connected_components_twostar(
     keeps the edge set from ballooning past the star graphs it
     converges to.
     """
-    # stage_frame (not persist) every generation: each round
+    # iterate stages (not persists) every generation: each round
     # references the previous edge set several times (union with its
     # swap, plus the min side), so the LOGICAL plan doubles per round —
     # persist caches data but still canonicalizes the full lineage,
     # which stack-overflows Catalyst after ~8 rounds. Checkpointing
     # truncates the plan to the materialized blocks.
-    e = (
+    init = (
         edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .transform(stage_frame)
     )
-    probe = e.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.col("u") + F.col("v")).alias("s")
-    ).collect()[0]
-    state = (probe["n"], probe["s"])
-    for _ in range(max_iters):
+
+    def step(e: DataFrame) -> DataFrame:
         # large-star: under each u, all neighbors (both directions);
         # larger neighbors re-attach to m = min(neighborhood ∪ {u})
         nbr = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -179,22 +214,17 @@ def connected_components_twostar(
         )
         sm = nbr2.filter(F.col("v") < F.col("u"))
         m2 = sm.groupBy("u").agg(F.min("v").alias("mv"))
-        new_e = (
+        return (
             sm.join(m2, "u")
             .select(F.col("v").alias("u"), F.col("mv").alias("v"))
             .unionByName(m2.select("u", F.col("mv").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .transform(stage_frame)
         )
-        release(e)
-        probe = new_e.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(F.col("u") + F.col("v")).alias("s")
-        ).collect()[0]
-        e = new_e
-        if (probe["n"], probe["s"]) == state:
-            break
-        state = (probe["n"], probe["s"])
+
+    e = iterate(
+        init, step, max_iters, probe=[F.count(F.lit(1)), F.sum(F.col("u") + F.col("v"))]
+    )
     # fixpoint edge set is a union of stars rooted at component minima:
     # every vertex's label = min(itself, its min neighbor)
     min_nbr = (
@@ -202,15 +232,13 @@ def connected_components_twostar(
         .groupBy("u")
         .agg(F.min("v").alias("mv"))
     )
-    labels = (
-        vertices.join(min_nbr, vertices.doc_id == min_nbr.u, "left")
-        .select(
+    return _hand_back(
+        vertices.join(min_nbr, vertices.doc_id == min_nbr.u, "left").select(
             "doc_id",
             F.least(F.col("doc_id"), F.coalesce("mv", F.col("doc_id"))).alias("cluster_id"),
-        )
-    ).transform(stage_frame)
-    release(e)
-    return labels
+        ),
+        e,
+    )
 
 
 def pagerank_fixed_point(
@@ -247,16 +275,15 @@ def pagerank_fixed_point(
 
     ``until_stable=True`` (VERDICT r7 item 9) is the production mode:
     iterate until ``max |Δrank| <= tol_units`` or ``max_iters``. The
-    probe is one integer scalar per round (``max(abs(new - old))`` via
-    an id-keyed self-join of two consecutive generations — exact, not
-    a sampled heuristic; the same bounded-scalar-collect budget as the
-    connected-components convergence probe). The stop rule is a
+    probe is ``max(abs(r - r_prev))``, observed on each generation's
+    staging job (:func:`iterate`); ``r_prev`` rides in by an id-keyed
+    join — exact, not a sampled heuristic. The stop rule is a
     TOLERANCE, not exact equality, because integer floor noise makes
     cyclic graphs oscillate by O(10^5) units forever — default
     ``tol_units=10^6`` is a 10^-3 rank tolerance at the default scale,
     reached in ~43 rounds on a 2-cycle. Per-generation ranks are
-    checkpointed in this mode (each generation is referenced twice:
-    next round + the probe), keeping the plan linear. The registered
+    staged in this mode (each generation is referenced twice: next
+    round + the ``r_prev`` carry), keeping the plan linear. The registered
     oracle queries keep the fixed-``iters`` form — the iteration count
     of a converged run is data-dependent, which a static SQL oracle
     can't replay.
@@ -302,7 +329,7 @@ def pagerank_fixed_point(
         )
 
     ranks: DataFrame | None = None
-    if until_stable:
+    if until_stable and max_iters > 0:
         # Non-receivers move exactly once (scale → base, conceptually
         # in round 1) and are flat afterwards; fold that one movement
         # into the round-1 probe as a scalar so the receiver-frame
@@ -310,31 +337,16 @@ def pagerank_fixed_point(
         n_nonrecv = vertices.join(
             ed.select(F.col("dst").alias("id")).distinct(), "id", "anti"
         ).count()
-        for round_no in range(max_iters):
-            new = step(ranks).transform(stage_frame)
-            if ranks is None:
-                recv_delta = (
-                    new.agg(F.max(F.abs(F.col("r") - F.lit(scale))).alias("d"))
-                    .collect()[0]["d"]
-                )
-                nonrecv_delta = (scale - base) if n_nonrecv else 0
-            else:
-                recv_delta = (
-                    new.withColumnRenamed("r", "rn")
-                    .join(ranks, "id")
-                    .agg(F.max(F.abs(F.col("rn") - F.col("r"))).alias("d"))
-                    .collect()[0]["d"]
-                )
-                nonrecv_delta = 0
-                release(ranks)
-            delta = max(
-                [d for d in (recv_delta, nonrecv_delta) if d is not None],
-                default=None,
-            )
-            ranks = new
-            if delta is not None and delta <= tol_units:
-                break
-    else:
+        ranks = iterate(
+            step(None).withColumn("r_prev", F.lit(scale).cast("long")),
+            lambda prev: step(prev).join(prev.select("id", F.col("r").alias("r_prev")), "id"),
+            max_iters - 1,
+            probe=[F.max(F.abs(F.col("r") - F.col("r_prev")))],
+            done=lambda prev, cur: max(
+                cur[0] or 0, scale - base if prev is None and n_nonrecv else 0
+            ) <= tol_units,
+        )
+    elif not until_stable:
         for _ in range(iters):
             ranks = step(ranks)
     if ranks is None:  # iters == 0: every rank is the initial scale
@@ -372,8 +384,8 @@ def label_propagation_fixed(
     changes label (labels are discrete, so exact stability is the
     right stop — unlike the PageRank tolerance) or ``max_iters``
     (synchronous LPA can 2-cycle on bipartite structures; the cap is
-    the standard guard). Probe = one integer scalar per round (count
-    of changed vertices over the already-checkpointed generations).
+    the standard guard). Probe = ``sum(changed)`` over a flag each
+    generation carries, observed on its staging job (:func:`iterate`).
     Registered oracles keep the fixed-``iters`` form — a converged
     run's round count is data-dependent, not SQL-replayable.
     """
@@ -383,9 +395,6 @@ def label_propagation_fixed(
         .distinct()
         .transform(stage_frame)
     )
-    labels = vertices.select("id", F.col("id").alias("lbl"))
-    if until_stable:
-        labels = labels.transform(stage_frame)
 
     # r16: ONE dst-keyed aggregation per round instead of two. The
     # winning label is the mode of the neighbor multiset (tie → the
@@ -419,30 +428,19 @@ def label_propagation_fixed(
         # iters=3, plan-audited). Materializing the |V|-row label
         # table per round keeps the plan linear, same pattern as the
         # two-star generations.
-        return (
-            prev.join(win, "id", "left")
-            .select("id", F.coalesce("wlbl", "lbl").alias("lbl"))
-            .transform(stage_frame)
+        new_lbl = F.coalesce("wlbl", "lbl")
+        return prev.join(win, "id", "left").select(
+            "id", new_lbl.alias("lbl"), (new_lbl != F.col("lbl")).cast("int").alias("changed")
         )
 
-    if until_stable:
-        for _ in range(max_iters):
-            new = step(labels)
-            changed = (  # bounded probe: ONE integer scalar per round
-                new.withColumnRenamed("lbl", "ln")
-                .join(labels, "id")
-                .filter(F.col("ln") != F.col("lbl"))
-                .count()
-            )
-            release(labels)
-            labels = new
-            if changed == 0:
-                break
-    else:
-        for _ in range(iters):
-            new = step(labels)
-            release(labels)
-            labels = new
+    # Every initial label is new; an empty vertex set stops at once.
+    labels = iterate(
+        vertices.select("id", F.col("id").alias("lbl"), F.lit(1).alias("changed")),
+        step,
+        max_iters if until_stable else iters,
+        probe=[F.sum("changed")] if until_stable else (),
+        done=lambda _, cur: not cur[0],
+    )
     return labels.select("id", F.col("lbl").cast("long").alias("community"))
 
 
@@ -489,8 +487,8 @@ def kmeans_fixed_point(
 
     ``rounds`` = number of assignment passes (rounds−1 centroid
     updates), fixed so the plan is static and a SQL oracle can replay
-    it; a converged production variant would reuse the integer
-    max-|Δcentroid| probe of :func:`pagerank_fixed_point`.
+    it. A converged variant would stop on a max-|Δcentroid| test; its
+    state is a driver-side dict, so it has no generation to :func:`iterate`.
     """
     sv = emb.select(
         "vec_id",
@@ -580,13 +578,12 @@ def bfs_hops_fixed(
     (``least`` skips NULLs identically on both engines — an unreached
     vertex carries NULL until first touched). Fixed rounds keep the
     plan static for the SQL oracle; a production run iterates until
-    the frontier empties (the same bounded scalar probe as
-    :func:`connected_components`) and propagates only the CHANGED
-    frontier — the delta optimization every Pregel implementation
-    ships; the fixed-round form's per-round cost is one edges⋈dist
-    equi-join + one dst-keyed integer min, key-partitioned shuffles
-    only. Per-generation localCheckpoint (the parquet-staging point of
-    a cluster run) keeps the plan linear — each generation is read by
+    the frontier empties (an observed probe on :func:`iterate`) and
+    propagates only the CHANGED frontier — the delta optimization
+    every Pregel implementation ships; the fixed-round form's
+    per-round cost is one edges⋈dist equi-join + one dst-keyed integer
+    min, key-partitioned shuffles only. :func:`iterate` stages every
+    generation, keeping the plan linear — each generation is read by
     both the join and the carry side.
     """
     und = (
@@ -600,21 +597,20 @@ def bfs_hops_fixed(
         F.when(F.col("id") == source, F.lit(0)).otherwise(F.lit(None))
         .cast("long")
         .alias("d"),
-    ).transform(stage_frame)
-    for _ in range(iters):
+    )
+
+    def step(dist: DataFrame) -> DataFrame:
         nb = (
             und.join(dist.withColumnRenamed("id", "src"), "src")
             .filter(F.col("d").isNotNull())
             .groupBy("dst")
             .agg(F.min(F.col("d") + 1).alias("nd"))
         )
-        new = (
-            dist.join(nb.withColumnRenamed("dst", "id"), "id", "left")
-            .select("id", F.least("d", "nd").alias("d"))
-            .transform(stage_frame)
+        return dist.join(nb.withColumnRenamed("dst", "id"), "id", "left").select(
+            "id", F.least("d", "nd").alias("d")
         )
-        release(dist)
-        dist = new
+
+    dist = iterate(dist, step, iters)
     return dist.select("id", F.coalesce("d", F.lit(-1)).cast("long").alias("hops"))
 
 
@@ -634,34 +630,31 @@ def kcore_fixed(
 
     ``rounds`` is FIXED so the plan is static and a SQL oracle unrolls
     it; the true fixpoint needs ≤ diameter rounds — a converged variant
-    would reuse the integer edge-count probe of
-    :func:`pagerank_fixed_point` (stop when no edge is dropped).
+    would pass :func:`iterate` an edge-count probe (stop when no edge
+    is dropped).
 
     Scale shape: per round ONE degree aggregation (key = vertex id) and
     two semi-joins filtering the edge list on its own keys — the edge
-    frame shrinks monotonically, each generation localCheckpointed (the
-    parquet-staging point of a cluster run) so the lineage stays
-    linear, exactly like the CC / LPA / PageRank iterations. Every
-    quantity is an exact integer.
+    frame shrinks monotonically, each generation staged by
+    :func:`iterate` so the lineage stays linear, exactly like the CC /
+    LPA / PageRank iterations. Every quantity is an exact integer.
     """
     both = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    und = both.distinct().transform(stage_frame)
-    for _ in range(rounds):
+
+    def step(und: DataFrame) -> DataFrame:
         keep = (
             und.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= core_k)
             .select("src")
         )
-        new = (
-            und.join(keep, "src", "semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "semi")
-            .transform(stage_frame)
+        return und.join(keep, "src", "semi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "semi"
         )
-        release(und)
-        und = new
+
+    und = iterate(both.distinct(), step, rounds)
     deg_f = und.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
     return (
         vertices.join(deg_f, vertices["id"] == deg_f["src"], "left")

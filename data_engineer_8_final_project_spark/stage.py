@@ -21,7 +21,7 @@ Lifetime rule:
 - Replay stages live until process exit. Lazy query results read them,
   and they are bounded by the number of distinct replay keys.
 - Drain roots are reaped by the drain before it returns.
-- Loop generations are reaped by :func:`release` once the next
+- Loop generations are reaped by ``clusters.iterate`` once the next
   generation supersedes them.
 
 Cluster rule: on a master other than ``local*`` executors write every
@@ -37,6 +37,10 @@ Confs (runtime, settable per session or submit):
   (executor block storage, freed by GC); at cluster scale it is a
   parquet write and read-back (off block-manager memory, survives
   executor loss, and the read-back re-splits to cluster parallelism).
+  A ``localCheckpoint`` stage carries the source plan's estimated size,
+  not the measured one (``dup_clusters``' 50-row edge list: 4.08e12 B,
+  where a materialized ``persist`` reports 800 B), so a join against it
+  is planned without broadcast.
 - ``spark.graft.stage.dir`` = the base dir above.
 
 A stage is not a cross-run cache: :func:`stage_frame` materializes the

@@ -5,12 +5,13 @@ every staging site must be code. Pin both sinks' value-equality, the
 default (bench-shape-preserving) sink, and the parquet sink's hygiene
 (unique per-call dir, no input-keyed naming = no cross-run caching),
 and ``release``, which reaps superseded loop generations (ADVICE r17
-item 1).
+item 1), and ``clusters.iterate``, the one loop driver that calls it.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -90,12 +91,17 @@ def _graph(spark, n: int):
     return vertices, edges
 
 
-LOOPS = {
-    "twostar": lambda v, e, k: clusters.connected_components_twostar(
+def _components(fn):
+    return lambda v, e, k: fn(
         v.withColumnRenamed("id", "doc_id"),
         e.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")),
         max_iters=k,
-    ),
+    )
+
+
+LOOPS = {
+    "cc": _components(clusters.connected_components),
+    "twostar": _components(clusters.connected_components_twostar),
     "pagerank": lambda v, e, k: clusters.pagerank_fixed_point(
         v, e, until_stable=True, max_iters=k, tol_units=-1
     ),
@@ -121,6 +127,119 @@ def test_loop_stage_dirs_do_not_grow_with_iterations(spark, parquet_sink, loop):
         out.count()  # the result still reads its (kept) last generation
         left.append(len(parquet_sink() - before))
     assert left[0] == left[1], f"{loop}: {left[0]} dirs at 2 rounds, {left[1]} at 6"
+
+
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs on this thread."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_iterate_stages_init_stops_on_a_repeat_and_probes_without_a_job(spark):
+    def init():  # a fresh frame per run: a re-run frame reuses its shuffles
+        return spark.range(40).groupBy((F.col("id") % 8).alias("k")).agg(F.max("id").alias("v"))
+
+    steps = []
+
+    def halve(gen):
+        steps.append(gen)
+        return gen.groupBy("k").agg(F.max(F.shiftright("v", 1)).alias("v"))
+
+    # max_iters=0 hands back the staged init and never steps
+    out = clusters.iterate(init(), halve, 0, probe=[F.sum("v")])
+    assert sorted(out.collect()) == sorted(init().collect()) and steps == []
+    # v = 32..39, so v >> 6 is 0 for every k: six halvings reach sum 0,
+    # the seventh repeats it and stops the loop far under the cap
+    out = clusters.iterate(init(), halve, 50, probe=[F.sum("v")])
+    assert len(steps) == 7 and out.agg(F.max("v")).first()[0] == 0
+    # the probe rides the staging job: one probed generation runs the
+    # jobs of an unprobed one
+    plain = _jobs(spark, lambda: clusters.iterate(init(), halve, 1))
+    probed = _jobs(
+        spark,
+        lambda: clusters.iterate(init(), halve, 1, probe=[F.sum("v")], done=lambda p, c: False),
+    )
+    assert probed == plain, f"{probed} jobs with a probe, {plain} without"
+
+
+def _plan_graphs(spark, after: int) -> list[tuple[dict, dict]]:
+    """(node names, child -> parents) of every SQL execution with an id
+    above ``after``, from Spark's record of the executed (final
+    adaptive) plans."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    out = []
+    it = store.executionsList().reverseIterator()
+    while it.hasNext():
+        ex = it.next()
+        if ex.executionId() <= after:
+            break
+        graph = store.planGraph(ex.executionId())
+        names, parents = {}, {}
+        nodes = graph.allNodes().iterator()
+        while nodes.hasNext():
+            n = nodes.next()
+            names[n.id()] = n.name()
+        edges = graph.edges().iterator()
+        while edges.hasNext():
+            e = edges.next()
+            parents.setdefault(e.fromId(), []).append(e.toId())
+        out.append((names, parents))
+    return out
+
+
+def _ancestors(node: int, parents: dict) -> set[int]:
+    seen, todo = set(), list(parents.get(node, []))
+    while todo:
+        i = todo.pop()
+        if i not in seen:
+            seen.add(i)
+            todo += parents.get(i, [])
+    return seen
+
+
+def _last_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.last().executionId() if execs.nonEmpty() else -1
+
+
+@pytest.mark.parametrize("sink", stage.SINKS)
+def test_observed_probe_runs_in_the_result_stage(spark, tmp_path, sink):
+    """``iterate``'s probe is an accumulator, so a retried task could
+    double-count it into a wrong stop unless the observe node runs in
+    the staging job's result stage, whose updates the DAGScheduler
+    applies once per partition. In the executed plan of every probed
+    generation of a components loop no Exchange sits above the
+    CollectMetrics node; the generation's own shuffles sit below it."""
+    spark.conf.set(stage.SINK_CONF, sink)
+    spark.conf.set(stage.DIR_CONF, str(tmp_path))
+    try:
+        after = _last_execution_id(spark)
+        v, e = _graph(spark, 12)
+        LOOPS["cc"](v, e, 3).count()
+        probed = below = 0
+        for names, parents in _plan_graphs(spark, after):
+            for node in [i for i, n in names.items() if n == "CollectMetrics"]:
+                probed += 1
+                above = [names[i] for i in _ancestors(node, parents)]
+                assert not [n for n in above if "Exchange" in n], (
+                    f"{sink}: {above} above CollectMetrics"
+                )
+                below += any(
+                    "Exchange" in n and node in _ancestors(i, parents) for i, n in names.items()
+                )
+        assert probed >= 3, f"{sink}: {probed} observed generations"
+        assert below, f"{sink}: no probed generation shuffles below its probe"
+    finally:
+        spark.conf.unset(stage.SINK_CONF)
+        spark.conf.unset(stage.DIR_CONF)
 
 
 @pytest.mark.parametrize(

@@ -46,6 +46,14 @@ One guards the session conf, which every concurrent query shares:
    session at the wrong value — a per-query setting goes on a session
    clone (``session.with_conf``) or into the plan.
 
+One guards the loop driver (``clusters.iterate``):
+
+9. a frame a query persists outlives it unless every path unpersists
+   it, and a loop that releases its own generations repeats the
+   stage/probe/release/cap cycle ``iterate`` owns — no package module
+   persists, caches or unpersists, and in ``operators/clusters.py``
+   only ``iterate`` and the post-loop hand-back call ``release``.
+
 These are ALLOWLIST tests, not bans: every existing site was
 adjudicated in the r13 sweep (SURVEY §13); a NEW site fails here until
 it is adjudicated (projected / bounded-keyspace / inside the helper)
@@ -288,4 +296,37 @@ def test_no_package_module_mutates_the_session_conf():
         f"{hits} mutate a session conf: every concurrent query on the "
         "session sees it. Set a per-query value on a clone "
         "(session.with_conf(df, conf)) or express it in the plan."
+    )
+
+
+def test_loop_generations_have_one_driver():
+    """Pattern 9: staging and release are the one frame lifetime rule
+    (stage.py), and ``clusters.iterate`` is the one loop that applies
+    it to generations; ``_hand_back`` releases what a loop leaves once
+    its result is staged."""
+    cached = []
+    for rel, src in _py_sources().items():
+        for node in ast.walk(ast.parse(src)):
+            fn = node.func if isinstance(node, ast.Call) else None
+            if isinstance(fn, ast.Attribute) and fn.attr in ("persist", "cache", "unpersist"):
+                cached.append(f"{rel}:{node.lineno}")
+    assert cached == [], (
+        f"{cached} persist, cache or unpersist a frame: stage it "
+        "(stage.stage_frame) so the one lifetime rule reaps it, and run a "
+        "loop on clusters.iterate."
+    )
+    tree = ast.parse(_py_sources()["operators/clusters.py"])
+    releasing = {
+        top.name
+        for top in tree.body
+        if isinstance(top, ast.FunctionDef)
+        and any(
+            isinstance(n, ast.Call) and getattr(n.func, "id", None) == "release"
+            for n in ast.walk(top)
+        )
+    }
+    assert releasing == {"iterate", "_hand_back"}, (
+        f"release( called in {releasing}: a loop supplies step and probe "
+        "expressions to clusters.iterate, which stages, probes, releases "
+        "and tests the cap."
     )
