@@ -97,6 +97,6 @@ def wholestage_codegen_ids(df: DataFrame) -> set[str]:
 
 def reused_exchange_count(df: DataFrame) -> int:
     """ReusedExchange nodes in the final plan — runtime dedup of
-    identical shuffle subtrees (e.g. a pair-aggregate consumed by both
-    unpivot legs executes once). Triggers execution."""
+    identical exchange subtrees, which then execute once. Triggers
+    execution."""
     return executed_plan(df).count("ReusedExchange")

@@ -14,6 +14,23 @@ Design notes (scale-first):
   path for non-relational operators).
 - No query changes the session conf; one that needs its own setting
   runs on a session clone (:func:`with_conf`).
+- Generated classes are compiled once per JVM for each query shape.
+  Spark caches compiled whole-stage and expression classes in one
+  JVM-wide cache of ``spark.sql.codegen.cache.maxEntries`` entries
+  (default 100, LRU evicted per Guava segment). The working sets exceed
+  that default: the 8 ``bi_dashboard`` queries generate about 160
+  distinct classes per pass, the ``curation_replay`` mix about 100, and
+  one pass over all 208 registered queries about 2940 (sf0.01, 4
+  cores). At 100 entries every warm dashboard pass recompiled about
+  150 classes with Janino; at 4096 a warm pass compiles none, unless
+  AQE numbers a query's racing stages in a new order (the stage ID is
+  part of the class name). The count follows query shapes, not data
+  volume, so the size holds at any scale. It is a static conf, read
+  when a JVM first uses the cache. In local mode the driver and its
+  tasks share one JVM and so one cache. On a non-local master each
+  executor keeps its own cache, and executors get the setting: on a
+  ``local-cluster`` master the executor's warm dashboard passes
+  compiled 0 classes at 4096 and 26-27 at the default.
 
 The reference ran Spark 3.3.2 standalone with a 1-core/1 GB worker
 (reference docker/docker-compose-spark.yml:26-27); this engine assumes
@@ -63,6 +80,10 @@ def get_spark(
         # methods at the JIT limit so such stages take the fast split
         # path automatically; fused stages under 8 KB are untouched.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # The smallest power of two above the ~2940 classes that one
+        # pass over the 208 registered queries compiles; at the default
+        # 100 every warm dashboard pass recompiled ~150 (module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
