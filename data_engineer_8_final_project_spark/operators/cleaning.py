@@ -17,10 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import scalars
-
-#: Re-exported for existing importers; canonical home is functions/scalars.py.
-DAY_NAMES = scalars.DAY_NAMES
-LATER_YEAR_MONTHS = scalars.LATER_YEAR_MONTHS
+from . import standings
 
 #: Junk sentinel rows dropped by the reference (dags/projectde_dag.py:46-47).
 JUNK_DATES = ("Averages", "Percentages")
@@ -111,63 +108,36 @@ def clean_matches(
 def league_standings(clean: DataFrame) -> DataFrame:
     """Per-league standings from cleaned matches (reference :159-248).
 
-    Reuses the flagship aggregation core (operators/standings.py) on the
-    reference's own column names; rank id is per-league with the
-    reference's 6-key DESC sort incl. the goal_against-DESC quirk.
+    Runs the flagship's standings core (operators/standings.py) on the
+    reference's own columns: the pair and club rollups keyed by league
+    plus the frozen ``created_at`` (constant per run, so carrying it as
+    a key equals the reference's first-row pick, :162), and the one
+    rank window (6-key DESC sort incl. the goal_against-DESC quirk,
+    club ASC appended for shuffle-stable ids).
     """
-    home_leg = clean.select(
-        "league",
-        F.col("home_team").alias("club"),
-        F.col("home_score").alias("gf"),
-        F.col("away_score").alias("ga"),
-        "created_at",
+    by = ("league", "created_at")
+    m = clean.select(
+        *by,
+        F.col("home_team").alias("home"),
+        F.col("away_team").alias("away"),
+        "home_score",
+        "away_score",
     )
-    away_leg = clean.select(
-        "league",
-        F.col("away_team").alias("club"),
-        F.col("away_score").alias("gf"),
-        F.col("home_score").alias("ga"),
-        "created_at",
+    return (
+        standings.club_rollup(standings.pair_rollup(m, by), by)
+        .select(
+            standings.rank_id(),
+            "club",
+            "points",
+            F.col("played").alias("match"),
+            "win",
+            "draw",
+            "loss",
+            "goal_for",
+            "goal_against",
+            "goal_diff",
+            "created_at",
+            "league",
+        )
+        .orderBy("league", "id")
     )
-    legs = home_leg.unionByName(away_leg)
-
-    gf, ga = F.col("gf"), F.col("ga")
-    agg = legs.groupBy("league", "club").agg(
-        F.count(F.lit(1)).alias("match"),
-        F.sum(F.when(gf > ga, 1).otherwise(0)).alias("win"),
-        F.sum(F.when(gf == ga, 1).otherwise(0)).alias("draw"),
-        # NULL-score legs fall through to loss (reference :180-181,207-208)
-        F.sum(F.when(gf > ga, 0).when(gf == ga, 0).otherwise(1)).alias("loss"),
-        F.coalesce(F.sum("gf"), F.lit(0)).alias("goal_for"),
-        F.coalesce(F.sum("ga"), F.lit(0)).alias("goal_against"),
-        F.first("created_at").alias("created_at"),  # F12: first-row propagation
-    )
-    agg = agg.withColumn("points", F.lit(3) * F.col("win") + F.col("draw")).withColumn(
-        "goal_diff", F.col("goal_for") - F.col("goal_against")
-    )
-
-    # O1 + W2: 6-key DESC sort (goal_against DESC quirk) + rank id;
-    # club ASC appended for shuffle-stable determinism.
-    w = Window.partitionBy("league").orderBy(
-        F.desc("points"),
-        F.desc("goal_for"),
-        F.desc("goal_against"),
-        F.desc("win"),
-        F.desc("draw"),
-        F.desc("loss"),
-        F.asc("club"),
-    )
-    return agg.select(
-        F.row_number().over(w).cast("long").alias("id"),
-        "club",
-        "points",
-        "match",
-        "win",
-        "draw",
-        "loss",
-        "goal_for",
-        "goal_against",
-        "goal_diff",
-        "created_at",
-        "league",
-    ).orderBy("league", "id")

@@ -31,23 +31,31 @@ Scale design (the part that must survive 100 TB):
 
 - The naive formulation (unpivot home/away legs with a UNION, then
   aggregate) makes Catalyst execute the scan+join tree TWICE — once per
-  leg. Instead we aggregate FIRST on the (home_nation, away_nation)
-  integer key pair — at most 25×25 = 625 groups, so the map-side
-  partial aggregation collapses ~everything and the shuffle moves a few
-  hundred rows regardless of input size — and unpivot/re-aggregate the
-  tiny pair-level aggregate. One pass over lineitem, one micro-shuffle.
+  leg. Instead :func:`pair_rollup` aggregates FIRST on the (home, away)
+  key pair — at most 25×25 = 625 groups for nation keys, so the
+  map-side partial aggregation collapses ~everything and the shuffle
+  moves a few hundred rows regardless of input size.
+- :func:`club_rollup` then unpivots each pair row into its two club
+  legs in ONE select (``inline`` over a two-struct array) and
+  re-aggregates per club. Both legs come from the same pair row, so
+  the plan scans and joins its input once.
 - Win/draw/loss survive the two-level split because per pair we keep
-  (n, n_home_win, n_draw, n_null): home leg derives loss =
-  n − win − draw (NULL rows land there, matching the quirk), away leg
-  symmetrically with away wins = n − n_home_win − n_draw − n_null.
+  (n, n_home_win, n_away_win, n_draw): each leg derives its loss as
+  n − win − draw, so NULL-score matches land there for both clubs (the
+  quirk) whichever score is NULL.
 - Only the genuinely-bounded dims (nation 25, region 5) get broadcast
   hints; customer/supplier join strategy is left to Catalyst/AQE (they
   grow with SF — hinting them broadcast would be a 100 TB lie).
+
+The same core serves the flagship (``by=()``, nation-key clubs), its
+stream (:func:`pair_rollup` as the stateful aggregation) and the
+reference pipeline (``operators/cleaning.py``, ``by`` = its league and
+frozen ``created_at``); :func:`rank_id` is the one rank window.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Matches whose orderkey hits this modulus get NULL scores (malformed-score analogue).
@@ -61,11 +69,10 @@ def matches(
     orders: DataFrame,
     customer: DataFrame,
     supplier: DataFrame,
-    nation: DataFrame,  # noqa: ARG001  (kept for API symmetry; names join later)
 ) -> DataFrame:
     """Synthesize the match table keyed by nation ids (names joined post-agg).
 
-    Columns: home_key, away_key (nationkeys), home_score, away_score
+    Columns: home, away (nationkeys), home_score, away_score
     (scores nullable — the malformed-score analogue).
     """
     malformed = (F.col("l_orderkey") % NULL_SCORE_MOD) == 0
@@ -73,16 +80,16 @@ def matches(
         lineitem.select("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
         .join(orders.select("o_orderkey", "o_custkey"), F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
-            customer.select("c_custkey", F.col("c_nationkey").alias("home_key")),
+            customer.select("c_custkey", F.col("c_nationkey").alias("home")),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .join(
-            supplier.select("s_suppkey", F.col("s_nationkey").alias("away_key")),
+            supplier.select("s_suppkey", F.col("s_nationkey").alias("away")),
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .select(
-            "home_key",
-            "away_key",
+            "home",
+            "away",
             F.when(malformed, F.lit(None).cast("long"))
             .otherwise((F.col("l_orderkey") + F.col("l_linenumber")) % SCORE_MOD)
             .alias("home_score"),
@@ -93,77 +100,73 @@ def matches(
     )
 
 
-def pair_rollup(match_df: DataFrame) -> DataFrame:
-    """Level 1: per (home_key, away_key) partial rollup.
+def pair_rollup(match_df: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """Level 1: per (*by, home, away) partial rollup of a match table
+    with columns home, away, home_score, away_score.
 
-    ≤ n_nations² groups — the shuffle is tiny at any scale, and the
-    same aggregation runs unchanged as a streaming stateful aggregation
-    (state = one fixed-width row per nation pair), which is how
-    ``standings_stream`` keeps running standings over the replay.
+    ≤ n_nations² groups per ``by`` key for the flagship — the shuffle is
+    tiny at any scale, and the same aggregation runs unchanged as a
+    streaming stateful aggregation (state = one fixed-width row per
+    nation pair), which is how ``standings_stream`` keeps running
+    standings over the replay.
     """
     hs, aw = F.col("home_score"), F.col("away_score")
-    pair = match_df.groupBy("home_key", "away_key").agg(
+    return match_df.groupBy(*by, "home", "away").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(hs > aw, 1).otherwise(0)).alias("n_home_win"),
+        F.sum(F.when(aw > hs, 1).otherwise(0)).alias("n_away_win"),
         F.sum(F.when(hs == aw, 1).otherwise(0)).alias("n_draw"),
-        F.sum(F.when(hs.isNull(), 1).otherwise(0)).alias("n_null"),
         F.coalesce(F.sum(hs), F.lit(0)).alias("sum_hs"),
         F.coalesce(F.sum(aw), F.lit(0)).alias("sum_as"),
     )
-    # away wins = non-null matches that are neither home wins nor draws
-    return pair.withColumn(
-        "n_away_win", F.col("n") - F.col("n_home_win") - F.col("n_draw") - F.col("n_null")
-    )
 
 
-def standings_from_pairs(pair: DataFrame, nation: DataFrame, region: DataFrame) -> DataFrame:
-    """Level 2: pair aggregate → legs → per-club rollup → rank.
+def club_rollup(pair: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """Level 2: pair rows → two club legs in one select → per (*by, club)
+    played/win/draw/loss/goal_for/goal_against/points/goal_diff."""
+    n, draw = F.col("n"), F.col("n_draw")
 
-    Input is :func:`pair_rollup` output (a few hundred rows at most),
-    from either the batch path or a drained streaming sink.
-    """
-    home_leg = pair.select(
-        F.col("home_key").alias("club_key"),
-        F.col("n"),
-        F.col("n_home_win").alias("win"),
-        F.col("n_draw").alias("draw"),
+    def leg(club: str, win: str, gf: str, ga: str) -> Column:
         # loss = everything else incl. NULL-score matches (reference quirk)
-        (F.col("n") - F.col("n_home_win") - F.col("n_draw")).alias("loss"),
-        F.col("sum_hs").alias("gf"),
-        F.col("sum_as").alias("ga"),
+        return F.struct(
+            F.col(club).alias("club"),
+            F.col(win).alias("win"),
+            (n - F.col(win) - draw).alias("loss"),
+            F.col(gf).alias("gf"),
+            F.col(ga).alias("ga"),
+        )
+
+    legs = pair.select(
+        *by,
+        "n",
+        "n_draw",
+        F.inline(
+            F.array(
+                leg("home", "n_home_win", "sum_hs", "sum_as"),
+                leg("away", "n_away_win", "sum_as", "sum_hs"),
+            )
+        ),
     )
-    away_leg = pair.select(
-        F.col("away_key").alias("club_key"),
-        F.col("n"),
-        F.col("n_away_win").alias("win"),
-        F.col("n_draw").alias("draw"),
-        (F.col("n") - F.col("n_away_win") - F.col("n_draw")).alias("loss"),
-        F.col("sum_as").alias("gf"),
-        F.col("sum_hs").alias("ga"),
-    )
-    agg = (
-        home_leg.unionByName(away_leg)
-        .groupBy("club_key")
+    return (
+        legs.groupBy(*by, "club")
         .agg(
             F.sum("n").alias("played"),
             F.sum("win").alias("win"),
-            F.sum("draw").alias("draw"),
+            F.sum("n_draw").alias("draw"),
             F.sum("loss").alias("loss"),
             F.sum("gf").alias("goal_for"),
             F.sum("ga").alias("goal_against"),
         )
         .withColumn("points", F.lit(3) * F.col("win") + F.col("draw"))
+        .withColumn("goal_diff", F.col("goal_for") - F.col("goal_against"))
     )
 
-    league = nation.join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-    ).select(
-        F.col("n_nationkey").alias("club_key2"),
-        F.col("n_name").alias("club"),
-        F.col("r_name").alias("league"),
-    )
 
-    ranked_w = Window.partitionBy("league").orderBy(
+def rank_id() -> Column:
+    """Per-league rank id over a :func:`club_rollup` frame whose club
+    column holds the club's name: the reference's 6-key DESC sort
+    (goal_against DESC quirk) plus club ASC for shuffle-stable ids."""
+    w = Window.partitionBy("league").orderBy(
         F.desc("points"),
         F.desc("goal_for"),
         F.desc("goal_against"),  # reference quirk: DESC, not ASC
@@ -172,11 +175,29 @@ def standings_from_pairs(pair: DataFrame, nation: DataFrame, region: DataFrame) 
         F.desc("loss"),
         F.asc("club"),  # determinism tiebreak (engine addition)
     )
+    return F.row_number().over(w).cast("long").alias("id")
+
+
+def standings_from_pairs(pair: DataFrame, nation: DataFrame, region: DataFrame) -> DataFrame:
+    """Nation-keyed :func:`pair_rollup` output → named, ranked standings.
+
+    Input is a few hundred rows at most, from either the batch path or
+    a drained streaming sink.
+    """
+    league = nation.join(
+        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
+    ).select(
+        F.col("n_nationkey").alias("club_key"),
+        F.col("n_name").alias("club"),
+        F.col("r_name").alias("league"),
+    )
     return (
-        agg.join(F.broadcast(league), F.col("club_key") == F.col("club_key2"))
+        club_rollup(pair)
+        .withColumnRenamed("club", "club_key")
+        .join(F.broadcast(league), "club_key")
         .select(
             "league",
-            F.row_number().over(ranked_w).cast("long").alias("id"),
+            rank_id(),
             "club",
             "points",
             "played",
@@ -185,24 +206,13 @@ def standings_from_pairs(pair: DataFrame, nation: DataFrame, region: DataFrame) 
             "loss",
             "goal_for",
             "goal_against",
-            (F.col("goal_for") - F.col("goal_against")).alias("goal_diff"),
+            "goal_diff",
         )
         .orderBy("league", "id")
     )
 
 
-def standings_from_matches(match_df: DataFrame, nation: DataFrame, region: DataFrame) -> DataFrame:
-    """Standings from a keyed match table — the A3+O1+W2 core, two-level."""
-    return standings_from_pairs(pair_rollup(match_df), nation, region)
-
-
 def standings(tables: dict[str, DataFrame]) -> DataFrame:
     """End-to-end flagship: fixture tables → standings."""
-    m = matches(
-        tables["lineitem"],
-        tables["orders"],
-        tables["customer"],
-        tables["supplier"],
-        tables["nation"],
-    )
-    return standings_from_matches(m, tables["nation"], tables["region"])
+    m = matches(tables["lineitem"], tables["orders"], tables["customer"], tables["supplier"])
+    return standings_from_pairs(pair_rollup(m), tables["nation"], tables["region"])

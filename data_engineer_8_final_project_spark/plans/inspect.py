@@ -17,7 +17,9 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -55,8 +57,9 @@ def scanned_columns(df: DataFrame) -> set[str]:
 
 def exchange_count(df: DataFrame) -> int:
     """Number of shuffle exchanges (excludes broadcast exchanges)."""
-    plan = explain_string(df)
-    return len(re.findall(r"\bExchange hashpartitioning|\bExchange rangepartitioning|\bExchange SinglePartition", plan))
+    # one numbered detail header per node, as in python_eval_count; a
+    # broadcast prints as ``BroadcastExchange``
+    return len(re.findall(r"^\(\d+\) Exchange$", explain_string(df), re.MULTILINE))
 
 
 def broadcast_join_count(df: DataFrame) -> int:
@@ -95,8 +98,10 @@ def wholestage_codegen_ids(df: DataFrame) -> set[str]:
     return set(re.findall(r"\*\((\d+)\)", executed_plan(df)))
 
 
-def reused_exchange_count(df: DataFrame) -> int:
-    """ReusedExchange nodes in the final plan — runtime dedup of
-    identical exchange subtrees, which then execute once. Triggers
-    execution."""
-    return executed_plan(df).count("ReusedExchange")
+def scan_counts(df: DataFrame) -> Counter[str]:
+    """File scans per table (file name without extension) in the final
+    plan only — the executed plan string also prints AQE's initial
+    plan. Triggers execution."""
+    final = executed_plan(df).split("== Initial Plan ==")[0]
+    paths = re.findall(r"FileScan .*?Location: \w+\([^)]*\)\[([^,\]]+)", final)
+    return Counter(os.path.splitext(os.path.basename(p.rstrip("/")))[0] for p in paths)

@@ -68,7 +68,7 @@ ORDER BY league, id
 @register(
     "standings",
     oracle=STANDINGS_ORACLE,
-    survey_ref="§2.4 A3, §2.6 O1, §2.5 W2, §2.7 U1, §2.3 J1",
+    survey_ref="§2.4 A3, §2.6 O1, §2.5 W2, §2.3 J1",
 )
 def q_standings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return standings(catalog.tables(spark, sf_dir))

@@ -109,7 +109,7 @@ def q_standings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair's running row every batch it changes. After the replay
     drains, the LAST emission per pair (max n — n strictly grows per
     emission) is the complete pair aggregate, and the batch finalizer
-    (standings_from_pairs: legs → club rollup → rank) produces the
+    (standings_from_pairs: club rollup → rank) produces the
     table the batch flagship oracle verifies.
 
     Scale shape: the stream side shuffles only into ≤ nation² state
@@ -136,10 +136,10 @@ def q_standings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     li_stream = (
         spark.readStream.schema(LINEITEM).option("maxFilesPerTrigger", 1).parquet(chunked)
     )
-    m = matches(li_stream, t["orders"], t["customer"], t["supplier"], t["nation"])
+    m = matches(li_stream, t["orders"], t["customer"], t["supplier"])
     sink = ev.run_available_now(pair_rollup(m), "update")
 
-    last = Window.partitionBy("home_key", "away_key").orderBy(F.desc("n"))
+    last = Window.partitionBy("home", "away").orderBy(F.desc("n"))
     final_pairs = (
         sink.withColumn("rn", F.row_number().over(last)).filter(F.col("rn") == 1).drop("rn")
     )

@@ -2,8 +2,10 @@
 
 For ANY match table — including NULL scores (the reference's
 malformed-score quirk) and clubs appearing only home or only away —
-the standings aggregation must satisfy the conservation laws of the
-double-entry bookkeeping it implements.
+the standings core must satisfy the conservation laws of the
+double-entry bookkeeping it implements, through both of its entry
+points: the reference pipeline's ``league_standings`` and the
+flagship's nation-keyed path.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from data_engineer_8_final_project_spark.operators.cleaning import league_standings
+from data_engineer_8_final_project_spark.operators.standings import pair_rollup, standings_from_pairs
 
 CLUBS = [f"CLUB_{i}" for i in range(6)]
 
@@ -24,23 +27,41 @@ match_row = st.tuples(
 )
 
 
-def _clean_df(spark, rows):
+def _reference(spark, rows):
+    """The reference pipeline's entry: cleaned matches by club name."""
     data = [
         ("league_x", h, a, hs, a_s, "2025-03-01 09:00:00")
         for h, a, hs, a_s in rows
     ]
-    return spark.createDataFrame(
+    clean = spark.createDataFrame(
         data,
         "league string, home_team string, away_team string, "
         "home_score int, away_score int, created_at string",
     )
+    return league_standings(clean).withColumnRenamed("match", "played")
+
+
+def _flagship(spark, rows):
+    """The flagship's keyed path: nation-keyed matches, names and the
+    league joined from a one-region nation/region frame."""
+    nation = spark.createDataFrame(
+        [(i, c, 0) for i, c in enumerate(CLUBS)],
+        "n_nationkey int, n_name string, n_regionkey int",
+    )
+    region = spark.createDataFrame([(0, "league_x")], "r_regionkey int, r_name string")
+    m = spark.createDataFrame(
+        [(CLUBS.index(h), CLUBS.index(a), hs, a_s) for h, a, hs, a_s in rows],
+        "home int, away int, home_score long, away_score long",
+    )
+    return standings_from_pairs(pair_rollup(m), nation, region)
 
 
 @pytest.mark.usefixtures("spark")
+@pytest.mark.parametrize("standings", [_reference, _flagship], ids=["league_standings", "flagship"])
 @given(rows=st.lists(match_row, min_size=1, max_size=30))
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_standings_conservation_laws(spark, rows):
-    out = league_standings(_clean_df(spark, rows)).collect()
+def test_standings_conservation_laws(spark, standings, rows):
+    out = standings(spark, rows).collect()
 
     n_matches = len(rows)
     n_null = sum(1 for _, _, hs, a_s in rows if hs is None or a_s is None)
@@ -52,10 +73,10 @@ def test_standings_conservation_laws(spark, rows):
     )
 
     # every match contributes exactly two legs
-    assert sum(r.match for r in out) == 2 * n_matches
+    assert sum(r.played for r in out) == 2 * n_matches
     # per-row bookkeeping
     for r in out:
-        assert r.match == r.win + r.draw + r.loss
+        assert r.played == r.win + r.draw + r.loss
         assert r.points == 3 * r.win + r.draw
         assert r.goal_diff == r.goal_for - r.goal_against
     # decisive matches pair one win with one loss; NULL matches are a

@@ -54,6 +54,15 @@ One guards the loop driver (``clusters.iterate``):
    persists, caches or unpersists, and in ``operators/clusters.py``
    only ``iterate`` and the post-loop hand-back call ``release``.
 
+One guards the standings core (``operators/standings.py``):
+
+10. a second copy of the standings rollup drifts from the first (the
+    reference pipeline's copy read its input twice through a leg
+    union, and only the flagship's copy was plan-tested) — the rank
+    order, the leg unpivot and the club aggregation are defined once,
+    in ``rank_id`` and ``club_rollup``, and neither standings module
+    unions legs.
+
 These are ALLOWLIST tests, not bans: every existing site was
 adjudicated in the r13 sweep (SURVEY §13); a NEW site fails here until
 it is adjudicated (projected / bounded-keyspace / inside the helper)
@@ -329,4 +338,21 @@ def test_loop_generations_have_one_driver():
         f"release( called in {releasing}: a loop supplies step and probe "
         "expressions to clusters.iterate, which stages, probes, releases "
         "and tests the cap."
+    )
+
+
+def test_standings_core_has_one_home():
+    """Pattern 10: the flagship, its stream and the reference pipeline
+    share one standings core; a new caller renames into its columns."""
+    core = "operators/standings.py"
+    assert _sites(r'desc\("goal_against"\)') == {(core, "rank_id")}, (
+        "a second standings rank window: order by standings.rank_id()"
+    )
+    assert _sites(r'\binline\(|alias\("goal_for"\)') == {(core, "club_rollup")}, (
+        "a second leg unpivot or club aggregation: rename into "
+        "pair_rollup's columns and call standings.club_rollup"
+    )
+    unions = {rel for rel, _ in _sites(r"unionByName\(")}
+    assert not unions & {core, "operators/cleaning.py"}, (
+        "standings legs come from one pair row (club_rollup), not a union"
     )
